@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""r15 full-registry plan audit: build every registry query's DataFrame,
+"""Full-registry plan audit: build every registry query's DataFrame,
 capture the formatted physical plan, and flag optimization smells:
 
 - BatchEvalPython  (row-at-a-time Python UDF — guide §4)
@@ -8,8 +8,11 @@ capture the formatted physical plan, and flag optimization smells:
 - exchange count (non-broadcast) per query
 - scans whose ReadSchema lists every column of a wide table
 
-Writes a TSV report to plans/r15/audit.tsv; plans are not persisted (the
-bench set's plans are committed separately).
+Usage: python scripts_dev_audit.py <out_dir>
+
+Writes a TSV report to <out_dir>/audit.tsv; plans are not persisted (the
+bench set's plans are committed separately).  SF dir via SPARK_GRAFT_SF_DIR
+(default sf0.01).
 """
 
 from __future__ import annotations
@@ -20,13 +23,15 @@ import traceback
 
 
 def main() -> int:
+    out_dir = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     from tensorbase_spark.queries import registry
     from tensorbase_spark.session import get_spark
 
-    spark = get_spark("tensorbase_r15_audit")
+    spark = get_spark("tensorbase_audit")
     reg = registry()
-    out = open("plans/r15/audit.tsv", "w")
+    os.makedirs(out_dir, exist_ok=True)
+    out = open(os.path.join(out_dir, "audit.tsv"), "w")
     print("query\texchanges\tbroadcasts\tbatch_eval_python\tarrow_eval\t"
           "map_in_pandas\tcartesian\tbnlj\terror", file=out)
     for name, q in reg.items():

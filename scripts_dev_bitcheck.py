@@ -1,32 +1,42 @@
 #!/usr/bin/env python
-"""r15 bit-identity sweep: collect the result sets of the touched
-approximate/ANN queries at the given SF dirs and write them (sorted
-stringified tuples) to a file — run under two checkouts (old/new code) and
-diff the outputs to prove result identity.
+"""Bit-identity sweep: collect the result sets of the given registry
+queries at the given SF dirs and write them (sorted stringified tuples) to
+<out_dir>/bitcheck.txt — run under two checkouts (old/new code) and diff
+the outputs to prove result identity.
 
-Usage: python scripts_dev_r15_bitcheck.py <out_file> <query> [query...]
+Usage: python scripts_dev_bitcheck.py <out_dir> <query> [query...]
 SF dirs via SPARK_GRAFT_BITCHECK_SFS (comma-sep, default sf0.01,sf0.1).
+
+The persisted ANN indexes under /tmp are deleted first: their source stamp
+covers the data and the build parameters but not the code, so a run would
+otherwise search an index another checkout built.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+
+INDEX_DIRS = ("/tmp/tbs_ivf_index", "/tmp/tbs_ivfpq_index")
 
 
 def main() -> int:
-    out_file = sys.argv[1]
+    out_dir = sys.argv[1]
     names = sys.argv[2:]
     sfs = os.environ.get(
         "SPARK_GRAFT_BITCHECK_SFS", "/root/testdata/sf0.01,/root/testdata/sf0.1"
     ).split(",")
+    for d in INDEX_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
     from tensorbase_spark.queries import registry
     from tensorbase_spark.session import get_spark
 
-    spark = get_spark("r15_bitcheck")
+    spark = get_spark("bitcheck")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    with open(out_file, "w") as f:
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "bitcheck.txt"), "w") as f:
         for sf_dir in sfs:
             for name in names:
                 rows = sorted(str(tuple(r)) for r in reg[name].fn(spark, sf_dir).collect())

@@ -1,13 +1,13 @@
 #!/usr/bin/env python
-"""r14 optimization probe: capture .explain("formatted") and/or time
+"""Optimization probe: capture .explain("formatted") and/or time
 individual bench/registry queries without running the whole bench.
 
 Usage:
-  python scripts_dev_r14_probe.py plan  <out_suffix> <query> [query...]
-  python scripts_dev_r14_probe.py time  <runs> <query> [query...]
-  python scripts_dev_r14_probe.py both  <out_suffix> <runs> <query> [query...]
+  python scripts_dev_probe.py plan  <out_dir> <out_suffix> <query> [query...]
+  python scripts_dev_probe.py time  <runs> <query> [query...]
+  python scripts_dev_probe.py both  <out_dir> <out_suffix> <runs> <query> [query...]
 
-Plans go to plans/r14/<query>_<out_suffix>.txt.  Timing uses the bench's
+Plans go to <out_dir>/<query>_<out_suffix>.txt.  Timing uses the bench's
 methodology exactly: build the DataFrame fresh each run, noop sink, wall
 clock, best-of-N + p50 printed.  SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS are
 honored like bench.py.
@@ -23,18 +23,19 @@ import time
 def main() -> int:
     mode = sys.argv[1]
     if mode == "plan":
-        suffix, runs, names = sys.argv[2], 0, sys.argv[3:]
+        out_dir, suffix, runs, names = sys.argv[2], sys.argv[3], 0, sys.argv[4:]
     elif mode == "time":
-        suffix, runs, names = None, int(sys.argv[2]), sys.argv[3:]
+        out_dir, suffix, runs, names = None, None, int(sys.argv[2]), sys.argv[3:]
     else:
-        suffix, runs, names = sys.argv[2], int(sys.argv[3]), sys.argv[4:]
+        out_dir, suffix = sys.argv[2], sys.argv[3]
+        runs, names = int(sys.argv[4]), sys.argv[5:]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from tensorbase_spark.queries import registry
     from tensorbase_spark.session import get_spark
     from tensorbase_spark.sources.tables import load_tables
 
-    spark = get_spark("tensorbase_r14_probe")
+    spark = get_spark("tensorbase_probe")
     reg = registry()
 
     # same warm-up as bench.py so timings are comparable
@@ -52,7 +53,8 @@ def main() -> int:
             _warm(F.col("id").cast("double"))
         ).write.format("noop").mode("overwrite").save()
 
-    os.makedirs("plans/r14", exist_ok=True)
+    if out_dir is not None:
+        os.makedirs(out_dir, exist_ok=True)
     for name in names:
         q = reg[name]
         if suffix is not None:
@@ -60,12 +62,12 @@ def main() -> int:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            path = f"plans/r14/{name}_{suffix}.txt"
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
         if runs:
-            spark.sparkContext.setJobDescription(f"r14probe: {name}")
+            spark.sparkContext.setJobDescription(f"probe: {name}")
             samples = []
             for _ in range(runs):
                 t0 = time.perf_counter()

@@ -1,18 +1,39 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: the exact baseline.  Query set broadcast against
-  the corpus; dot products via zip_with/aggregate — JVM-side, no Python.
-- IVF (inverted-file) top-k: the scale path.  Corpus is bucketed by nearest
-  centroid once (one shuffle, reusable partitioning); queries probe only the
-  nprobe nearest centroid buckets, so per-query work is corpus/k_centroids *
-  nprobe instead of the full corpus.  At 100 TB the bucketed corpus would be
-  written bucketBy(centroid_id) so repeated query batches never reshuffle.
+Search paths, all returning (q_id, c_id, rank, cos) top-k rows per query:
 
-Centroids are deterministic k-means: trained on a bounded, hash-ordered
-sample driver-side (the standard IVF practice — index libraries train coarse
-quantizers on a sample, never the corpus), maximin init + fixed Lloyd
-iterations in numpy.  No runtime randomness anywhere, so results are
-reproducible and oracle-checkable.
+- brute force: exact cosine, ONE Arrow pass over the corpus with the
+  collected query matrix in the closure;
+- IVF (in memory, ``ivf_topk``, or persisted, ``ivf_search_indexed``):
+  queries probe only their nprobe nearest k-means buckets;
+- sign-LSH: candidates share a random-hyperplane bucket with the query;
+- PQ and IVF-PQ (in memory, or persisted via ``build_ivfpq_index``): ADC
+  scores from per-query lookup tables, a k*cand_mult candidate cut, then an
+  exact cosine re-rank.
+
+Every numpy-side path shares one set of kernels, so their arithmetic cannot
+drift apart: ``_cos_rows`` (the float64 einsum cosine, zero norms score 0.0,
+never NaN), ``_nearest`` (the subspace L2 encode), ``_train_books``
+(maximin init + fixed Lloyd iterations per subspace), ``_adc`` and
+``_ivfpq_slices`` (the IVF-PQ per-centroid-slice ADC), ``_topn`` (the
+per-batch cut, ties to the lower id).  Query sets come through one loader,
+``_load_queries``.
+
+Contract of every search path:
+
+- ids: ``q_id``/``c_id`` keep the input id column's type (long, string,
+  decimal, ...), taken from the input schemas;
+- an empty query set returns an empty DataFrame with the normal schema;
+- NULL vectors: brute force keeps NULL queries and corpus rows, which
+  score NULL and rank last; IVF probes a NULL query's first nprobe centroid
+  ids and scores it NULL; PQ, IVF-PQ and LSH drop NULL queries and corpus
+  rows.
+
+Centroids and codebooks are deterministic: trained on a bounded,
+hash-ordered sample driver-side (the standard IVF practice — index
+libraries train coarse quantizers on a sample, never the corpus), maximin
+init + fixed Lloyd iterations in numpy.  No runtime randomness anywhere, so
+results are reproducible and oracle-checkable.
 """
 
 from __future__ import annotations
@@ -63,18 +84,238 @@ def _cosine_pudf(a: pd.Series, b: pd.Series) -> pd.Series:
     valid = (a.notna() & b.notna()).to_numpy()
     out = np.full(len(a), np.nan)  # NaN -> Arrow null -> Spark NULL
     if valid.any():
-        ma = np.stack(a[valid].to_numpy()).astype(np.float64)
-        mb = np.stack(b[valid].to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-            np.einsum("ij,ij->i", mb, mb)
+        out[valid] = _cos_rows(
+            np.stack(a[valid].to_numpy()).astype(np.float64),
+            np.stack(b[valid].to_numpy()).astype(np.float64),
         )
-        out[valid] = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
     return pd.Series(out)
 
 
 def cosine(a, b) -> F.Column:
     return _cosine_pudf(a, b)
+
+
+# ---- shared numpy kernels: every ANN path computes through these ----
+
+
+def _norms(x: np.ndarray) -> np.ndarray:
+    return np.sqrt(np.einsum("ij,ij->i", x, x))
+
+
+def _cos_rows(a: np.ndarray, b: np.ndarray, nb: np.ndarray | None = None) -> np.ndarray:
+    """Row-wise float64 cosine of matched rows: one einsum for the dots, one
+    per side for the norms (``nb``: b's norms, when the caller reuses them
+    across queries).  A zero norm scores 0.0, never NaN."""
+    num = np.einsum("ij,ij->i", a, b)
+    den = _norms(a) * (_norms(b) if nb is None else nb)
+    return np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+
+
+def _unit(x: np.ndarray) -> np.ndarray:
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    return x / np.where(n > 0, n, 1.0)
+
+
+def _topn(s: np.ndarray, ids: np.ndarray, n: int) -> np.ndarray:
+    """Column order of each row's top ``n`` scores, ties to the lower id.
+    A per-batch (or per-slice) top cut is batch-boundary independent: any
+    global top-n row ranks <= n inside its own batch."""
+    return np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[:, :n]
+
+
+def _nearest(xs: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """Nearest codeword per row by L2: argmin ||x-c||^2 = ||x||^2 - 2 x.c
+    + ||c||^2, one GEMM instead of an O(n*k*d) broadcast-subtract temporary
+    (ties -> lowest code, the np.argmin contract)."""
+    return np.argmin(-2.0 * (xs @ cb.T) + (cb**2).sum(axis=1), axis=1)
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 codes: each contiguous subvector's nearest codeword."""
+    m, _ks, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = _nearest(x[:, j * dsub : (j + 1) * dsub], books[j])
+    return codes
+
+
+def _train_books(x: np.ndarray, m: int, ksub: int, iters: int = 8) -> np.ndarray:
+    """Per-subspace L2 k-means codebooks (m, ksub, dim//m): maximin init
+    from row 0 of the hash-ordered sample, then a fixed Lloyd count; empty
+    cells keep their codeword.  No seeds — bit-identical every run."""
+    dim = x.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    ks = min(ksub, len(x))
+    books = np.empty((m, ks, dsub))
+    for j in range(m):
+        xs = x[:, j * dsub : (j + 1) * dsub]
+        chosen = [0]
+        d2 = ((xs - xs[0]) ** 2).sum(axis=1)
+        for _ in range(1, ks):
+            nxt = int(np.argmax(d2))
+            chosen.append(nxt)
+            d2 = np.minimum(d2, ((xs - xs[nxt]) ** 2).sum(axis=1))
+        cb = xs[chosen].copy()
+        for _ in range(iters):
+            assign = _nearest(xs, cb)
+            for c in range(ks):
+                members = xs[assign == c]
+                if len(members):
+                    cb[c] = members.mean(axis=0)
+        books[j] = cb
+    return books
+
+
+def _luts(qn: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables: LUT[j] is the (nq, ksub) dot products of each unit
+    query's subvector j with codebook j's entries."""
+    m, _ks, dsub = books.shape
+    return np.stack(
+        [qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
+    )
+
+
+def _adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(nq, n) approximate dot products: sum_j LUT[j][:, codes[:, j]]."""
+    s = lut[0][:, codes[:, 0]]
+    for j in range(1, len(lut)):
+        s = s + lut[j][:, codes[:, j]]
+    return s
+
+
+def _ivfpq_codes(x: np.ndarray, cents: np.ndarray, books: np.ndarray):
+    """IVF-PQ encode of raw vectors: nearest (unit) centroid, then the PQ
+    codes of the unit vector's residual from it."""
+    xn = _unit(x)
+    cid = np.argmax(xn @ cents.T, axis=1)
+    return cid, _pq_codes(xn - cents[cid], books)
+
+
+def _ivfpq_tables(Q: np.ndarray, cents: np.ndarray, books: np.ndarray, nprobe: int):
+    """Query side of IVF-PQ: (sim_qc, probing, lut).  sim_qc is the
+    query.centroid term of every score, probing maps each centroid to the
+    query rows that probe it (their nprobe nearest), lut the ADC tables."""
+    qn = _unit(Q)
+    sim_qc = qn @ cents.T
+    order = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, len(cents))]
+    probing = {
+        c: np.nonzero((order == c).any(axis=1))[0] for c in range(len(cents))
+    }
+    return sim_qc, probing, _luts(qn, books)
+
+
+def _ivfpq_slices(cids, ids, codes, tables, top: int):
+    """ADC-score each same-centroid slice of a batch against the queries
+    probing it, score = q.(centroid + residual), and cut each slice to its
+    top ``top`` per query.  Yields (query rows, batch rows, adc) per slice.
+    Any split into slices gives the same final result (the _topn argument)."""
+    sim_qc, probing, lut = tables
+    for c in np.unique(cids):
+        qi = probing.get(int(c))
+        if qi is None or not len(qi):
+            continue
+        sel = np.nonzero(cids == c)[0]
+        s = _adc(lut[:, qi], codes[sel]) + sim_qc[qi, int(c)][:, None]
+        o = _topn(s, ids[sel], top)
+        yield (
+            np.repeat(qi, o.shape[1]),
+            sel[o.ravel()],
+            np.take_along_axis(s, o, axis=1).ravel(),
+        )
+
+
+# ---- query sets and result windows shared by every search path ----
+
+
+def _query_frame(
+    queries: DataFrame, id_col: str, vec_col: str, keep_null: bool = False
+) -> DataFrame:
+    q = queries if keep_null else queries.filter(F.col(vec_col).isNotNull())
+    return q.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+
+
+def _stack_queries(rows, dim: int = 0):
+    """Collected (q_id, q_vec) rows -> (ids, Q, ok).  ``ids`` keep the id
+    column's values (Arrow converts them back to its type); ``Q`` is the
+    float64 (nq, dim) matrix with NaN rows for NULL vectors, which ``ok``
+    marks False.  An empty set gives a (0, dim) matrix."""
+    ids = np.array([r.q_id for r in rows])
+    ok = np.array([r.q_vec is not None for r in rows], dtype=bool)
+    vecs = [r.q_vec for r in rows if r.q_vec is not None]
+    Q = np.full((len(rows), len(vecs[0]) if vecs else dim), np.nan)
+    if vecs:
+        Q[ok] = vecs
+    return ids, Q, ok
+
+
+def _load_queries(
+    queries: DataFrame, id_col: str, vec_col: str, dim: int = 0,
+    keep_null: bool = False,
+):
+    """Collect the query set driver-side in one job (see _stack_queries).
+    NULL vectors are dropped unless ``keep_null``."""
+    return _stack_queries(
+        _query_frame(queries, id_col, vec_col, keep_null).collect(), dim
+    )
+
+
+def _corpus_pass(
+    emb: DataFrame, id_col: str, vec_col: str, n: int | None, nq: int,
+    schema, score, keep_null: bool = False,
+) -> DataFrame:
+    """ONE mapInPandas pass over the (c_id, c_vec) corpus rows:
+    ``score(ids, vecs)`` turns each Arrow batch into candidate frames
+    against the query matrix held in its closure; self-matches are dropped.
+    With no queries the corpus is cut to zero rows — same plan and schema,
+    nothing scored."""
+    c = emb if keep_null else emb.filter(F.col(vec_col).isNotNull())
+    c = _spread(
+        c.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
+        "c_id",
+        n,
+    )
+    if not nq:
+        c = c.limit(0)
+
+    def _scan(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield from score(pdf["c_id"].to_numpy(), pdf["c_vec"].to_numpy())
+
+    return c.mapInPandas(_scan, schema=schema).filter(F.col("q_id") != F.col("c_id"))
+
+
+def _pair_schema(queries: DataFrame, emb: DataFrame, id_col: str, *scores: str):
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("q_id", queries.schema[id_col].dataType),
+            T.StructField("c_id", emb.schema[id_col].dataType),
+        ]
+        + [T.StructField(s, T.DoubleType()) for s in scores]
+    )
+
+
+def _top_k(scored: DataFrame, k: int, c_col: str = "c_id") -> DataFrame:
+    """The final ranking every path ends with: per q_id, cos desc (NULLS
+    LAST), ties to the lower candidate id."""
+    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(c_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", F.col(c_col).alias("c_id"), "rank", F.round("cos", 6).alias("cos"))
+    )
+
+
+def _adc_cut(adc: DataFrame, k2: int) -> DataFrame:
+    """Global candidate cut to the k2 best ADC scores per query.  Followed
+    by _top_k's exact re-rank, both windows are q_id-partitioned, so they
+    share ONE Exchange."""
+    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
+    return adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
 
 
 def _spread(
@@ -136,88 +377,37 @@ def brute_force_topk(
     times (at sf1: 4M pair rows ~ 4 GB of duplicated vectors through
     Arrow).  Now the corpus crosses ONCE and the window input is
     batches x nq x (k+1) skinny rows.  The per-pair arithmetic is
-    _cosine_pudf's float64 einsum, op for op — per-row reductions are
+    _cos_rows, the kernel _cosine_pudf uses too — per-row reductions are
     independent of batch composition, so scores are bit-identical
     (verified old-vs-new at sf0.01/sf0.1 + the SQL oracle hash).
     NULL semantics preserved exactly: a NULL query or corpus vector
     scores NaN -> Arrow null -> Spark NULL, which sorts NULLS LAST under
     cos DESC with the c_id tiebreak — np.lexsort places NaN last the
     same way."""
-    from pyspark.sql import types as T
+    q_ids, Q, ok = _load_queries(queries, id_col, vec_col, keep_null=True)
 
-    qrows = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    q_ids = np.array([r.q_id for r in qrows])
-    q_vecs = [
-        None if r.q_vec is None else np.asarray(r.q_vec, dtype=np.float64)
-        for r in qrows
-    ]
-    top_n = k + 1
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["c_id"].to_numpy()
-            raw = pdf["c_vec"].to_numpy()
-            valid = np.array([v is not None for v in raw])
-            nb = len(ids)
-            X = (
-                np.stack(raw[valid]).astype(np.float64)
-                if valid.any()
-                else np.empty((0, 1))
-            )
-            nx = np.sqrt(np.einsum("ij,ij->i", X, X)) if len(X) else X[:, 0]
-            s = np.full((len(q_ids), nb), np.nan)
-            for qi, qv in enumerate(q_vecs):
-                if qv is None or not valid.any():
-                    continue
-                ma = np.broadcast_to(qv, X.shape)
-                num = np.einsum("ij,ij->i", ma, X)
-                den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * nx
-                s[qi, valid] = np.where(
-                    den > 0, num / np.where(den > 0, den, 1.0), 0.0
-                )
-            top = min(top_n, nb)
-            order = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[
-                :, :top
-            ]
-            rep = np.repeat(np.arange(len(q_ids)), top)
-            flat = order.ravel()
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[rep],
-                    "c_id": ids[flat],
-                    "cos": np.take_along_axis(s, order, axis=1).ravel(),
-                }
-            )
-
-    scored = (
-        _spread(
-            emb.select(
-                F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-            ),
-            "c_id",
-            n,
+    def _score(ids, raw):
+        valid = np.array([v is not None for v in raw])
+        s = np.full((len(q_ids), len(ids)), np.nan)
+        if valid.any():
+            X = np.stack(raw[valid]).astype(np.float64)
+            nx = _norms(X)  # once per batch, shared by every query
+            for qi in np.nonzero(ok)[0]:
+                s[qi, valid] = _cos_rows(np.broadcast_to(Q[qi], X.shape), X, nx)
+        order = _topn(s, ids, k + 1)  # +1 absorbs a query matching itself
+        yield pd.DataFrame(
+            {
+                "q_id": np.repeat(q_ids, order.shape[1]),
+                "c_id": ids[order.ravel()],
+                "cos": np.take_along_axis(s, order, axis=1).ravel(),
+            }
         )
-        .mapInPandas(_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
+
+    scored = _corpus_pass(
+        emb, id_col, vec_col, n, len(q_ids),
+        _pair_schema(queries, emb, id_col, "cos"), _score, keep_null=True,
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", F.col("rank"), F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(scored, k)
 
 
 def semantic_contamination(
@@ -334,7 +524,11 @@ def train_centroids(
     Returns a tiny (n_centroids)-row DataFrame (centroid_id, cent_vec) meant
     to be broadcast."""
     cents = _train_centroids_np(emb, n_centroids, id_col, vec_col, sample_size, iters)
-    spark = emb.sparkSession
+    return _centroid_frame(emb.sparkSession, cents, range(len(cents)))
+
+
+def _centroid_frame(spark, cents: np.ndarray, ids) -> DataFrame:
+    """The tiny broadcastable (centroid_id, cent_vec) table."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -344,7 +538,7 @@ def train_centroids(
         ]
     )
     return spark.createDataFrame(
-        [(i, [float(v) for v in cents[i]]) for i in range(len(cents))], schema
+        [(int(i), [float(v) for v in c]) for i, c in zip(ids, cents)], schema
     )
 
 
@@ -398,9 +592,8 @@ def _assign_multi_np(
         ]
         if not vals:
             return pd.Series([], dtype=object)
-        S = np.stack(vals) @ C.T
-        order = np.lexsort((np.broadcast_to(ids, S.shape), -S), axis=1)
-        return pd.Series([ids[t].tolist() for t in order[:, :n_probe]])
+        order = _topn(np.stack(vals) @ C.T, ids, n_probe)
+        return pd.Series([ids[t].tolist() for t in order])
 
     return _spread(
         emb.select(F.col(id_col).alias("v_id"), F.col(vec_col).alias("v_vec")),
@@ -427,19 +620,7 @@ def assign_centroids(
     # collecting it back (the pre-r14 shape) paid a scheduled job just to
     # round-trip numpy -> DataFrame -> numpy
     cents_np = _train_centroids_np(emb, n_centroids, id_col, vec_col)
-    spark = emb.sparkSession
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    cents = spark.createDataFrame(
-        [(i, [float(v) for v in cents_np[i]]) for i in range(len(cents_np))],
-        schema,
-    )
+    cents = _centroid_frame(emb.sparkSession, cents_np, range(len(cents_np)))
     assigned = _assign_multi_np(
         emb,
         cents_np,
@@ -499,26 +680,32 @@ def ivf_topk(
             n = emb.count()
         n_centroids = auto_n_centroids(n, target_bucket)
     cents, assigned = assign_centroids(emb, n_centroids, id_col, vec_col, n=n)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    q_cent = q.crossJoin(F.broadcast(cents)).withColumn(
-        "cos_c", cosine(F.col("q_vec"), F.col("cent_vec"))
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("centroid_id"))
-    probes = (
-        q_cent.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_vec", "centroid_id")
-    )
     scored = (
-        probes.join(assigned, "centroid_id")
+        _probe_frame(queries, cents, nprobe, id_col, vec_col)
+        .join(assigned, "centroid_id")
         .filter(F.col("q_id") != F.col("v_id"))
         .withColumn("cos", cosine(F.col("q_vec"), F.col("v_vec")))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("v_id"))
+    return _top_k(scored, k, "v_id")
+
+
+def _probe_frame(
+    queries: DataFrame, cents: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(q_id, q_vec, centroid_id) for each query's nprobe nearest centroids,
+    distributed: crossJoin the broadcast centroid table, rank per query by
+    (cos desc, centroid_id asc); a NULL query vector's NULL cosines sort
+    last, so it probes the first nprobe centroid ids."""
+    q_cent = (
+        _query_frame(queries, id_col, vec_col, keep_null=True)
+        .crossJoin(F.broadcast(cents))
+        .withColumn("cos_c", cosine(F.col("q_vec"), F.col("cent_vec")))
+    )
+    wq = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("centroid_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col("v_id").alias("c_id"), "rank", F.round("cos", 6).alias("cos"))
+        q_cent.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= nprobe)
+        .select("q_id", "q_vec", "centroid_id")
     )
 
 
@@ -663,13 +850,7 @@ def lsh_topk(
         .select("q_id", "q_vec", "c_id", "c_vec")
         .dropDuplicates(["q_id", "c_id"])
     )
-    scored = cand.withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(cand.withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec"))), k)
 
 
 def embedding_near_dup_pairs(
@@ -747,9 +928,7 @@ def embedding_near_dup_pairs(
         # identical ranking to the r2 window (cosine desc, centroid_id asc):
         # centroid rows are unit vectors, so dot order == cosine order per v.
         X = np.stack(v.to_numpy()).astype(np.float64)
-        S = X @ cents.T  # (batch, k)
-        order = np.lexsort((np.broadcast_to(np.arange(k), S.shape), -S), axis=1)
-        top = order[:, :n_probe]
+        top = _topn(X @ cents.T, np.arange(k), n_probe)
         return pd.Series(list(top.astype(np.int64)))
 
     assigned = _spread(
@@ -775,7 +954,7 @@ def embedding_near_dup_pairs(
     def _score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["v_id"].to_numpy()
         X = np.stack(pdf["v_vec"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", X, X))
+        norms = _norms(X)
         safe = np.where(norms > 0, norms, 1.0)
         m = len(ids)
         out_a, out_b, out_c = [], [], []
@@ -819,7 +998,7 @@ def label_knn_classify(
 ) -> DataFrame:
     """kNN majority-vote over the label column — the standard embedding
     quality probe for a training-data pipeline."""
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    q = _query_frame(queries, id_col, vec_col, keep_null=True)
     c = _spread(
         emb.select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"),
@@ -938,7 +1117,7 @@ def ivf_search_indexed(
 
     r14: centroids load via pyarrow (no Spark job) and the per-query probe
     ranking runs driver-side over the collected query matrix — the same
-    einsum float64 arithmetic `_cosine_pudf` applies, the same (cos desc,
+    _cos_rows arithmetic `_cosine_pudf` applies, the same (cos desc,
     centroid_id asc) order — replacing a crossJoin+window job, a
     localCheckpoint materialization and a distinct-collect job with one
     numpy pass (guide §1.2 step 1: remove whole jobs before tuning them).
@@ -956,61 +1135,57 @@ def ivf_search_indexed(
     C = np.array([r["cent_vec"] for r in crows], dtype=np.float64)
     cent_ids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
     vecs = spark.read.parquet(f"{path}/vectors")
-    qrows = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).limit(max_query_collect + 1).collect()
-    if len(qrows) > max_query_collect:
+    q_ids, Q, ok = _stack_queries(
+        _query_frame(queries, id_col, vec_col, keep_null=True)
+        .limit(max_query_collect + 1)
+        .collect()
+    )
+    if len(q_ids) > max_query_collect:
         return _ivf_search_indexed_distributed(
             spark, C, cent_ids, vecs, queries, k, nprobe, id_col, vec_col
         )
     n_probe = min(nprobe, len(cent_ids))
     probe_rows = []
-    probe_ids_set: set[int] = set()
-    for r in qrows:
-        if r.q_vec is None:
+    for q_id, qv, valid in zip(q_ids.tolist(), Q, ok):
+        if valid:
+            cos = _cos_rows(np.broadcast_to(qv, C.shape), C)
+            chosen = cent_ids[np.lexsort((cent_ids, -cos))[:n_probe]]
+        else:
             # _cosine_pudf yields NULL cosines for a NULL query vector;
             # under (cos desc NULLS LAST, centroid_id asc) that means the
             # first n_probe centroid ids — replicate exactly
             chosen = cent_ids[:n_probe]
-        else:
-            qv = np.asarray(r.q_vec, dtype=np.float64)
-            ma = np.broadcast_to(qv, C.shape)
-            num = np.einsum("ij,ij->i", ma, C)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                np.einsum("ij,ij->i", C, C)
-            )
-            cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-            order = np.lexsort((cent_ids, -cos))
-            chosen = cent_ids[order[:n_probe]]
-        for c in chosen:
-            probe_rows.append((r.q_id, r.q_vec, int(c)))
-            probe_ids_set.add(int(c))
+        q_vec = qv.tolist() if valid else None
+        probe_rows += [(q_id, q_vec, int(c)) for c in chosen]
     from pyspark.sql import types as T
 
-    q_vec_type = queries.schema[vec_col].dataType
     probes = spark.createDataFrame(
         probe_rows,
         T.StructType(
             [
                 T.StructField("q_id", queries.schema[id_col].dataType),
-                T.StructField("q_vec", q_vec_type),
+                T.StructField("q_vec", queries.schema[vec_col].dataType),
                 T.StructField("centroid_id", T.LongType()),
             ]
         ),
     )
-    probe_ids = sorted(probe_ids_set)
+    probe_ids = sorted({c for _q, _v, c in probe_rows})
+    return _rerank_probed(probes, vecs, probe_ids, k, id_col, vec_col)
+
+
+def _rerank_probed(
+    probes: DataFrame, vecs: DataFrame, probe_ids: list, k: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """Exact top-k over the probed buckets of a persisted IVF index: the
+    IN filter on the partition column prunes the scan to those buckets."""
     candidates = vecs.filter(F.col("centroid_id").isin(probe_ids))
     scored = (
         probes.join(candidates, "centroid_id")
         .filter(F.col("q_id") != F.col(id_col))
         .withColumn("cos", cosine(F.col("q_vec"), F.col(vec_col)))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", F.col(id_col).alias("c_id"), "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(scored, k, id_col)
 
 
 def _ivf_search_indexed_distributed(
@@ -1030,47 +1205,14 @@ def _ivf_search_indexed_distributed(
     (cos desc, centroid_id asc) — identical ranking to the driver-side
     numpy path, including NULL query vectors falling to the first nprobe
     centroid ids (NULL cosines sort last, ties break on centroid_id)."""
-    from pyspark.sql import types as T
-
-    cent_schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType(), False),
-            T.StructField("cent_vec", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    cents = spark.createDataFrame(
-        [(int(cent_ids[i]), [float(x) for x in C[i]]) for i in range(len(cent_ids))],
-        cent_schema,
-    )
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    q_cent = q.crossJoin(F.broadcast(cents)).withColumn(
-        "cos_c", cosine(F.col("q_vec"), F.col("cent_vec"))
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("centroid_id"))
-    probes = (
-        q_cent.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_vec", "centroid_id")
-        .localCheckpoint()  # the collect below would otherwise re-run the
-    )                       # centroid scoring when the returned plan executes
+    cents = _centroid_frame(spark, C, cent_ids)
+    # localCheckpoint: the collect below would otherwise re-run the centroid
+    # scoring when the returned plan executes
+    probes = _probe_frame(queries, cents, nprobe, id_col, vec_col).localCheckpoint()
     probe_ids = sorted(
         {r.centroid_id for r in probes.select("centroid_id").distinct().collect()}
     )
-    candidates = vecs.filter(F.col("centroid_id").isin(probe_ids))
-    scored = (
-        probes.join(candidates, "centroid_id")
-        .filter(F.col("q_id") != F.col(id_col))
-        .withColumn("cos", cosine(F.col("q_vec"), F.col(vec_col)))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", F.col(id_col).alias("c_id"), "rank",
-            F.round("cos", 6).alias("cos"),
-        )
-    )
+    return _rerank_probed(probes, vecs, probe_ids, k, id_col, vec_col)
 
 
 def _train_pq_np(
@@ -1093,34 +1235,7 @@ def _train_pq_np(
     unit-normalized sample matrix (skips the collect job)."""
     if x is None:
         x = _collect_training_sample(emb, id_col, vec_col, sample_size)
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    ks = min(ksub, len(x))
-    books = np.empty((m, ks, dsub))
-    for j in range(m):
-        xs = x[:, j * dsub : (j + 1) * dsub]
-        # maximin init on L2 distance, start from row 0 of the hash order
-        chosen = [0]
-        d2 = ((xs - xs[0]) ** 2).sum(axis=1)
-        for _ in range(1, ks):
-            nxt = int(np.argmax(d2))
-            chosen.append(nxt)
-            d2 = np.minimum(d2, ((xs - xs[nxt]) ** 2).sum(axis=1))
-        cb = xs[chosen].copy()
-        for _ in range(iters):
-            # argmin over ||x-c||^2 = const - 2 x.c + ||c||^2: one GEMM per
-            # iter instead of the O(n*k*d) broadcast-subtract temporary
-            # (ties -> lowest code, np.argmin contract)
-            dist = -2.0 * (xs @ cb.T) + (cb**2).sum(axis=1)
-            assign = np.argmin(dist, axis=1)
-            for c in range(ks):
-                members = xs[assign == c]
-                if len(members):
-                    cb[c] = members.mean(axis=0)
-        books[j] = cb
-    return books
+    return _train_books(x, m, ksub, iters)
 
 
 def pq_encode(
@@ -1136,20 +1251,10 @@ def pq_encode(
     makes 100 TB of embeddings scannable from memory."""
     from pyspark.sql import types as T
 
-    m, ks, dsub = codebooks.shape
-
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def _codes(v: pd.Series) -> pd.Series:
-        X = np.stack(v.to_numpy()).astype(np.float64)
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        X = X / np.where(n > 0, n, 1.0)
-        out = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            xs = X[:, j * dsub : (j + 1) * dsub]
-            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 -> argmin over c
-            d = -2.0 * (xs @ codebooks[j].T) + (codebooks[j] ** 2).sum(axis=1)
-            out[:, j] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
+        X = _unit(np.stack(v.to_numpy()).astype(np.float64))
+        return pd.Series(list(_pq_codes(X, codebooks)))
 
     return emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("v_id"), _codes(F.col(vec_col)).alias("codes")
@@ -1182,8 +1287,6 @@ def pq_topk(
     Queries ride the closure as a (nq, dim) matrix (bounded by contract —
     same envelope as brute_force_topk's broadcast).  Corpus bytes moved:
     m ints per row in stage 3, k*cand_mult vectors per query in stage 4."""
-    from pyspark.sql import types as T
-
     # ONE collect job fetches the training sample AND the query set (r14;
     # they were two scheduled jobs): a tagged union, with the sample branch
     # re-sorted driver-side by the exact Spark ordering key (md5 of the
@@ -1209,126 +1312,52 @@ def pq_topk(
         emb.filter(F.col(vec_col).isNotNull())
         .select(
             F.lit(0).alias("b"),
-            F.col(id_col).alias("i"),
-            F.col(vec_col).alias("v"),
+            F.col(id_col).alias("q_id"),
+            F.col(vec_col).alias("q_vec"),
         )
-        .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
+        .orderBy(F.md5(F.col("q_id").cast("string")), F.col("q_id"))
         .limit(4096)
     )
-    q_b = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.lit(1).alias("b"), F.col(id_col).alias("i"), F.col(vec_col).alias("v")
-    )
+    q_b = _query_frame(queries, id_col, vec_col).select(F.lit(1).alias("b"), "*")
     if _union_ok:
         rows = samp_b.unionByName(q_b).collect()
         srows = sorted(
-            (r for r in rows if r["b"] == 0),
-            key=lambda r: (_hashlib.md5(str(r["i"]).encode()).hexdigest(), r["i"]),
+            (r for r in rows if r.b == 0),
+            key=lambda r: (_hashlib.md5(str(r.q_id).encode()).hexdigest(), r.q_id),
         )
     else:
         srows = samp_b.collect()  # Spark-ordered: no driver-side re-sort
         rows = srows + q_b.collect()  # b-tags still partition the two sets
-    xs = np.array([r["v"] for r in srows], dtype=np.float64)
-    nn = np.linalg.norm(xs, axis=1, keepdims=True)
-    xs = xs / np.where(nn > 0, nn, 1.0)
+    xs = _unit(np.array([r.q_vec for r in srows], dtype=np.float64))
     books = _train_pq_np(emb, m, ksub, id_col, vec_col, x=xs)
-
-    qrows = [r for r in rows if r["b"] == 1]
-    q_ids = np.array([r["i"] for r in qrows])
-    Q = np.stack([np.asarray(r["v"], dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    dsub = Q.shape[1] // m
-    # LUT[j]: (nq, ksub) dot products of query subvector vs codebook entries
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-    )
+    q_ids, Q, _ok = _stack_queries([r for r in rows if r.b == 1], xs.shape[1])
+    lut = _luts(_unit(Q), books)
     k2 = k * cand_mult
 
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def _encode_adc_scan(batches):
-        # r14 fused encode + ADC into ONE Arrow pass; r15 (VERDICT r14 #5
-        # and what's-wrong #4) additionally computes the EXACT cosine for
-        # each per-batch survivor inside the same pass: the raw query
-        # matrix and the batch's raw vectors are both already in hand, so
-        # the re-rank's broadcast join + second Python eval + the
-        # post-ArrowEvalPython re-shuffle disappear from the plan, and
-        # candidate rows carry two doubles instead of the raw vector
-        # (the r14 carried-vector volume is gone entirely).  The cosine
-        # arithmetic is _cosine_pudf's, op for op: float64 stacks of the
-        # raw vectors, one einsum for num, two for the norms, 0.0 for
-        # zero norms — bit-identical to the r14 join re-rank (verified by
-        # result-set equality sweeps + the sim_pq_rerank_full oracle).
-        # The per-batch top-(k2+1) cut is batch-boundary-independent (any
-        # global top-k2 row ranks <= k2 inside its own batch), so results
-        # are identical under any partitioning.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["v_id"].to_numpy()
-            raw = pdf["v"].to_numpy()
-            X = np.stack(raw).astype(np.float64)
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(n > 0, n, 1.0)
-            C = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                xs = Xn[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (xs @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                C[:, j] = np.argmin(d, axis=1)
-            # sum_j LUT[j][:, C[:, j]] -> (nq, nb) approximate dot products
-            s = lut[0][:, C[:, 0]]
-            for j in range(1, m):
-                s = s + lut[j][:, C[:, j]]
-            nb = len(ids)
-            top = min(k2 + 1, nb)  # +1 absorbs a query matching itself
-            # per-batch top candidates per query; ties -> lower c_id (lexsort)
-            order = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[:, :top]
-            qi = np.repeat(np.arange(len(q_ids)), top)
-            flat = order.ravel()
-            ma = Q[qi]        # raw float64 queries, row per candidate pair
-            mb = X[flat]      # raw float64 batch vectors
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                np.einsum("ij,ij->i", mb, mb)
-            )
-            cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "q_id": q_ids[qi],
-                    "c_id": ids[flat],
-                    "adc": np.take_along_axis(s, order, axis=1).ravel(),
-                    "cos": cos,
-                }
-            )
-
-    adc = (
-        _spread(
-            emb.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("v_id"), F.col(vec_col).alias("v")
-            ),
-            "v_id",
-            n,
+    def _score(ids, raw):
+        # encode + ADC + the EXACT cosine of each per-batch survivor in ONE
+        # Arrow pass (r15): the raw query matrix and the batch's raw vectors
+        # are both in hand, so the re-rank needs no join, and candidate rows
+        # carry two doubles instead of the raw vector.
+        X = np.stack(raw).astype(np.float64)
+        s = _adc(lut, _pq_codes(_unit(X), books))
+        o = _topn(s, ids, k2 + 1)  # +1 absorbs a query matching itself
+        qi = np.repeat(np.arange(len(q_ids)), o.shape[1])
+        flat = o.ravel()
+        yield pd.DataFrame(
+            {
+                "q_id": q_ids[qi],
+                "c_id": ids[flat],
+                "adc": np.take_along_axis(s, o, axis=1).ravel(),
+                "cos": _cos_rows(Q[qi], X[flat]),
+            }
         )
-        .mapInPandas(_encode_adc_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
+
+    adc = _corpus_pass(
+        emb, id_col, vec_col, n, len(q_ids),
+        _pair_schema(queries, emb, id_col, "adc", "cos"), _score,
     )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
-    # exact re-rank over the already-carried cos column: both windows are
-    # q_id-partitioned, so they share ONE Exchange — no joins after the scan
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(_adc_cut(adc, k2), k)
 
 
 def l2_normalize(
@@ -1498,142 +1527,39 @@ def ivfpq_topk(
     corpus would be written PARTITIONED BY centroid_id and a probe reads
     nprobe directories of m-byte codes).  Residual PQ matters: residuals
     are centered near zero, so the same codebook budget quantizes them
-    ~one centroid-radius finer than raw vectors."""
+    ~one centroid-radius finer than raw vectors.
+
+    Search is ONE corpus pass (r15): encode, per-centroid-slice ADC, AND
+    the exact cosine of each per-slice survivor, all inside a single
+    mapInPandas over the raw embeddings, so the re-rank is two
+    q_id-partitioned windows sharing one Exchange — no join back to the
+    corpus.  The arithmetic is the indexed path's (_ivfpq_codes,
+    _ivfpq_slices, _cos_rows), so both return identical results (pinned by
+    the indexed-vs-memory equality test and the sim_ivfpq_full_cover
+    oracle)."""
     cents, books = _train_ivfpq_np(emb, n_centroids, m, ksub, id_col, vec_col)
-    return _ivfpq_topk_fused(
-        emb, queries, cents, books, k, nprobe, cand_mult, id_col, vec_col, n=n
-    )
-
-
-def _ivfpq_topk_fused(
-    emb: DataFrame,
-    queries: DataFrame,
-    cents: np.ndarray,
-    books: np.ndarray,
-    k: int,
-    nprobe: int,
-    cand_mult: int,
-    id_col: str,
-    vec_col: str,
-    n: int | None = None,
-) -> DataFrame:
-    """In-memory IVF-PQ search as ONE corpus pass (r15, VERDICT r14 #7):
-    encode (nearest centroid + residual codes), per-centroid-slice ADC,
-    AND the exact cosine for each per-slice survivor — all inside a single
-    mapInPandas over the raw embeddings.  The r14 shape ran TWO chained
-    Python stages (encode, then score) and re-ranked by joining the
-    candidate ids back against a SECOND full scan of the embeddings plus a
-    broadcast-join of the queries and a third Python eval; with the raw
-    vectors already in hand inside the scan, all of that collapses to two
-    q_id-partitioned windows sharing one Exchange.  Every piece of
-    arithmetic is element-for-element the r14 code's (_ivfpq_encode's
-    encode, _score_slice's LUT+sim_qc ADC, _cosine_pudf's float64 einsum
-    cosine), and per-slice top-(k2+1) cuts are slice-boundary-independent,
-    so results are bit-identical (pinned by the indexed-vs-memory equality
-    test and the sim_ivfpq_full_cover oracle).  The INDEXED path keeps the
-    join re-rank: its code table deliberately stores m-byte codes, not raw
-    vectors (_ivfpq_search)."""
-    from pyspark.sql import types as T
-
-    m, _ks, dsub = books.shape
-    nlist = len(cents)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    q_ids = np.array([r.q_id for r in qrows])
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    sim_qc = Qn @ cents.T
-    order_q = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, nlist)]
-    probing = {
-        int(c): np.nonzero((order_q == c).any(axis=1))[0] for c in range(nlist)
-    }
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-    )
+    q_ids, Q, _ok = _load_queries(queries, id_col, vec_col, cents.shape[1])
+    tables = _ivfpq_tables(Q, cents, books, nprobe)
     k2 = k * cand_mult
 
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    def _score(ids, raw):
+        X = np.stack(raw).astype(np.float64)
+        cid, codes = _ivfpq_codes(X, cents, books)
+        for rep, sel, adc in _ivfpq_slices(cid, ids, codes, tables, k2 + 1):
+            yield pd.DataFrame(
+                {
+                    "q_id": q_ids[rep],
+                    "c_id": ids[sel],
+                    "adc": adc,
+                    "cos": _cos_rows(Q[rep], X[sel]),
+                }
+            )
 
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["v_id"].to_numpy()
-            raw = pdf["v"].to_numpy()
-            X = np.stack(raw).astype(np.float64)
-            nn = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(nn > 0, nn, 1.0)
-            cid = np.argmax(Xn @ cents.T, axis=1)
-            R = Xn - cents[cid]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                rj = R[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (rj @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d, axis=1)
-            for c in np.unique(cid):
-                qi = probing.get(int(c))
-                if qi is None or not len(qi):
-                    continue
-                mask = cid == c
-                sids = ids[mask]
-                C = codes[mask]
-                s = lut[0][qi][:, C[:, 0]]
-                for j in range(1, m):
-                    s = s + lut[j][qi][:, C[:, j]]
-                s = s + sim_qc[qi, int(c)][:, None]
-                top = min(k2 + 1, len(sids))
-                o = np.lexsort((np.broadcast_to(sids, s.shape), -s), axis=1)[
-                    :, :top
-                ]
-                rep = np.repeat(qi, top)
-                flat = o.ravel()
-                sel = np.nonzero(mask)[0][flat]
-                ma = Q[rep]
-                mb = X[sel]
-                num = np.einsum("ij,ij->i", ma, mb)
-                den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                    np.einsum("ij,ij->i", mb, mb)
-                )
-                cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-                yield pd.DataFrame(
-                    {
-                        "q_id": q_ids[rep],
-                        "c_id": sids[flat],
-                        "adc": np.take_along_axis(s, o, axis=1).ravel(),
-                        "cos": cos,
-                    }
-                )
-
-    adc = (
-        _spread(
-            emb.filter(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("v_id"), F.col(vec_col).alias("v")
-            ),
-            "v_id",
-            n,
-        )
-        .mapInPandas(_scan, schema=out_schema)
-        .filter(F.col("q_id") != F.col("c_id"))
+    adc = _corpus_pass(
+        emb, id_col, vec_col, n, len(q_ids),
+        _pair_schema(queries, emb, id_col, "adc", "cos"), _score,
     )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k(_adc_cut(adc, k2), k)
 
 
 def _train_ivfpq_np(
@@ -1652,32 +1578,9 @@ def _train_ivfpq_np(
     cents = _train_centroids_np(
         emb, n_centroids, id_col, vec_col, x=xs
     )  # unit rows
-    dim = xs.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
+    # per-subspace codebooks on the RESIDUALS from each row's centroid
     res = xs - cents[np.argmax(xs @ cents.T, axis=1)]
-    # per-subspace k-means on RESIDUALS (maximin init, fixed Lloyd, GEMM form)
-    ks = min(ksub, len(res))
-    books = np.empty((m, ks, dsub))
-    for j in range(m):
-        rj = res[:, j * dsub : (j + 1) * dsub]
-        chosen = [0]
-        d2 = ((rj - rj[0]) ** 2).sum(axis=1)
-        for _ in range(1, ks):
-            nxt = int(np.argmax(d2))
-            chosen.append(nxt)
-            d2 = np.minimum(d2, ((rj - rj[nxt]) ** 2).sum(axis=1))
-        cb = rj[chosen].copy()
-        for _ in range(8):
-            dist = -2.0 * (rj @ cb.T) + (cb**2).sum(axis=1)
-            assign = np.argmin(dist, axis=1)
-            for c in range(ks):
-                members = rj[assign == c]
-                if len(members):
-                    cb[c] = members.mean(axis=0)
-        books[j] = cb
-    return cents, books
+    return cents, _train_books(res, m, ksub)
 
 
 def _ivfpq_encode(
@@ -1691,10 +1594,9 @@ def _ivfpq_encode(
     """One Arrow pass: nearest centroid + residual codes per vector."""
     from pyspark.sql import types as T
 
-    m, _ks, dsub = books.shape
     enc_schema = T.StructType(
         [
-            T.StructField("v_id", T.LongType()),
+            T.StructField("v_id", emb.schema[id_col].dataType),
             T.StructField("centroid_id", T.IntegerType()),
             T.StructField("codes", T.ArrayType(T.IntegerType())),
         ]
@@ -1702,19 +1604,15 @@ def _ivfpq_encode(
 
     def _encode(batches):
         for pdf in batches:
-            ids = pdf["v_id"].to_numpy()
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nn = np.linalg.norm(X, axis=1, keepdims=True)
-            X = X / np.where(nn > 0, nn, 1.0)
-            cid = np.argmax(X @ cents.T, axis=1)
-            R = X - cents[cid]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                rj = R[:, j * dsub : (j + 1) * dsub]
-                d = -2.0 * (rj @ books[j].T) + (books[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d, axis=1)
+            cid, codes = _ivfpq_codes(
+                np.stack(pdf["v"].to_numpy()).astype(np.float64), cents, books
+            )
             yield pd.DataFrame(
-                {"v_id": ids, "centroid_id": cid.astype(np.int32), "codes": list(codes)}
+                {
+                    "v_id": pdf["v_id"].to_numpy(),
+                    "centroid_id": cid.astype(np.int32),
+                    "codes": list(codes),
+                }
             )
 
     return _spread(
@@ -1724,112 +1622,6 @@ def _ivfpq_encode(
         "v_id",
         n,
     ).mapInPandas(_encode, schema=enc_schema)
-
-
-def _ivfpq_search(
-    enc: DataFrame,
-    emb: DataFrame,
-    queries: DataFrame,
-    cents: np.ndarray,
-    books: np.ndarray,
-    k: int,
-    nprobe: int,
-    cand_mult: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    from pyspark.sql import types as T  # noqa: F401 (schema types below)
-
-    m, _ks, dsub = books.shape
-    nlist = len(cents)
-    # ---- query side: probe sets + per-bucket ADC via applyInPandas ----
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    q_ids = np.array([r.q_id for r in qrows])
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    sim_qc = Qn @ cents.T  # (nq, nlist): query . centroid term of the score
-    order = np.argsort(-sim_qc, axis=1)[:, : min(nprobe, nlist)]
-    probing = {int(c): np.nonzero((order == c).any(axis=1))[0] for c in range(nlist)}
-    lut = np.stack(
-        [Qn[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-    )
-    k2 = k * cand_mult
-
-    adc_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-
-    def _score_slice(ids, C, cid):
-        """ADC-score one same-centroid slice against the queries probing
-        it; per-slice top-(k2+1) cut.  Any partitioning into slices gives
-        the same final result: a global top-k2 row ranks <= k2 inside any
-        slice that contains it, so the global window cut downstream sees
-        every survivor (same argument as the per-batch PQ cut)."""
-        qi = probing.get(cid)
-        if qi is None or not len(qi):
-            return None
-        s = lut[0][qi][:, C[:, 0]]
-        for j in range(1, m):
-            s = s + lut[j][qi][:, C[:, j]]
-        s = s + sim_qc[qi, cid][:, None]  # q.(centroid + residual)
-        top = min(k2 + 1, len(ids))
-        o = np.lexsort((np.broadcast_to(ids, s.shape), -s), axis=1)[:, :top]
-        rep = np.repeat(qi, top)
-        return pd.DataFrame(
-            {
-                "q_id": q_ids[rep],
-                "c_id": ids[o.ravel()],
-                "adc": np.take_along_axis(s, o, axis=1).ravel(),
-            }
-        )
-
-    def _score_batches(batches):
-        # r14: mapInPandas over the (partition-pruned) code stream instead
-        # of groupBy(centroid_id).applyInPandas — the ADC score needs no
-        # cross-row grouping, only each row's OWN centroid id, so the
-        # bucket Exchange was a whole shuffle stage spent on nothing
-        # (guide §2.4).  Batches may mix centroids; score per same-cid
-        # slice within the batch.
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["centroid_id"].to_numpy()
-            ids_all = pdf["v_id"].to_numpy()
-            C_all = np.stack(pdf["codes"].to_numpy())
-            for cid in np.unique(cids):
-                mask = cids == cid
-                out = _score_slice(ids_all[mask], C_all[mask], int(cid))
-                if out is not None and len(out):
-                    yield out
-
-    adc = enc.mapInPandas(_score_batches, schema=adc_schema).filter(
-        F.col("q_id") != F.col("c_id")
-    )
-    wa = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("c_id"))
-    cand = adc.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") <= k2)
-    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    scored = (
-        cand.select("q_id", "c_id")
-        .join(c, "c_id")
-        .join(F.broadcast(q), "q_id")
-        .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", F.round("cos", 6).alias("cos"))
-    )
 
 
 def build_ivfpq_index(
@@ -1894,8 +1686,9 @@ def ivfpq_search_indexed(
     """Search a persisted IVF-PQ index: centroids/codebooks load driver-side
     (tiny), the probe set becomes an IN filter on the codes table's
     partition column (PartitionFilters — only probed directories are read),
-    ADC + exact re-rank run exactly as the in-memory path, so results are
-    identical (asserted in tests)."""
+    ADC runs on the in-memory path's kernels, so results are identical
+    (asserted in tests).  The exact re-rank joins the candidates back to
+    ``emb``: the code table stores m-byte codes, not raw vectors."""
     # side tables are nlist / m*ksub rows — pyarrow reads them driver-side
     # with zero Spark jobs (r14; was two scheduled read+collect jobs)
     cent_rows = _read_parquet_local(f"{path}/centroids").to_pylist()
@@ -1912,22 +1705,44 @@ def ivfpq_search_indexed(
     books = np.empty((mm, ks, dsub))
     for r in book_rows:
         books[r["subspace"], r["code"]] = r["vec"]
-    # probe-set partition pruning: nprobe nearest centroids per query,
-    # unioned into an IN filter on the partition column (a bounded
-    # driver-side computation over the collected query matrix)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(vec_col).alias("q_vec"))
-        .collect()
-    )
-    Q = np.stack([np.asarray(r.q_vec, dtype=np.float64) for r in qrows])
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn > 0, qn, 1.0)
-    order = np.argsort(-(Qn @ cents.T), axis=1)[:, : min(nprobe, len(cents))]
-    probe_ids = sorted({int(c) for c in order.ravel()})
+    # ONE collect of the query set feeds both the probe-set partition
+    # pruning (the union of every query's nprobe nearest centroids becomes
+    # an IN filter on the partition column) and the ADC tables
+    q_ids, Q, _ok = _load_queries(queries, id_col, vec_col, cents.shape[1])
+    tables = _ivfpq_tables(Q, cents, books, nprobe)
+    probe_ids = sorted(c for c, qi in tables[1].items() if len(qi))
     codes = spark.read.parquet(f"{path}/codes").filter(
         F.col("centroid_id").isin(probe_ids)
     )
-    return _ivfpq_search(
-        codes, emb, queries, cents, books, k, nprobe, cand_mult, id_col, vec_col
+    k2 = k * cand_mult
+
+    def _score_batches(batches):
+        # r14: mapInPandas over the (partition-pruned) code stream instead
+        # of groupBy(centroid_id).applyInPandas — the ADC score needs no
+        # cross-row grouping, only each row's OWN centroid id, so the
+        # bucket Exchange was a whole shuffle stage spent on nothing.
+        # Batches may mix centroids; _ivfpq_slices scores per same-cid slice.
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["v_id"].to_numpy()
+            for rep, sel, adc in _ivfpq_slices(
+                pdf["centroid_id"].to_numpy(),
+                ids,
+                np.stack(pdf["codes"].to_numpy()),
+                tables,
+                k2 + 1,
+            ):
+                yield pd.DataFrame({"q_id": q_ids[rep], "c_id": ids[sel], "adc": adc})
+
+    adc = codes.mapInPandas(
+        _score_batches, schema=_pair_schema(queries, emb, id_col, "adc")
+    ).filter(F.col("q_id") != F.col("c_id"))
+    c = emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
+    scored = (
+        _adc_cut(adc, k2).select("q_id", "c_id")
+        .join(c, "c_id")
+        .join(F.broadcast(_query_frame(queries, id_col, vec_col, keep_null=True)), "q_id")
+        .withColumn("cos", cosine(F.col("q_vec"), F.col("c_vec")))
     )
+    return _top_k(scored, k)

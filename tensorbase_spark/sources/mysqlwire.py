@@ -617,6 +617,7 @@ class _MyConn(socketserver.StreamRequestHandler):
                     [("", "@@max_allowed_packet", MYSQL_TYPE_LONG, UNSIGNED_FLAG)],
                     iter([(67108864,)]),
                 )
+                pio.send(build_eof())
             else:
                 pio.send(build_ok())
             return
@@ -624,21 +625,30 @@ class _MyConn(socketserver.StreamRequestHandler):
         if _USE_RE.match(text):
             self._init_db(pio, engine, text[4:])
             return
-        # live-processlist entry for the whole request incl. the
-        # streaming fetch — listable/killable from another connection
-        with engine.track_query(text, interface="mysql"):
-            df = engine.sql(text)
-            if df is None or not df.columns:
-                # DDL / INSERT / session command (mysql/mod.rs:110-134)
-                pio.send(build_ok())
-                return
-            cols = [
-                ("", f.name) + spark_type_to_mysql(f.dataType)
-                for f in df.schema.fields
-            ]
-            self._send_resultset(
-                pio, cols, (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True))
-            )
+        self._execute(pio, engine, text)
+
+    def _execute(self, pio: PacketIO, engine, sql: str, binary: bool = False) -> None:
+        """Run one statement and answer it.  The live-processlist entry
+        covers the whole request incl. the streaming fetch (listable and
+        killable from another connection), but the closing OK/EOF goes out
+        only after track_query has removed it: a client that holds its
+        whole result never sees its own query still listed."""
+        with engine.track_query(sql, interface="mysql"):
+            df = engine.sql(sql)
+            # DDL / INSERT / session command: a bare OK (mysql/mod.rs:110-134)
+            done = build_ok()
+            if df is not None and df.columns:
+                cols = [
+                    ("", f.name) + spark_type_to_mysql(f.dataType)
+                    for f in df.schema.fields
+                ]
+                self._send_resultset(
+                    pio, cols,
+                    (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)),
+                    binary=binary,
+                )
+                done = build_eof()
+        pio.send(done)
 
     def _stmt_prepare(self, pio: PacketIO, sql: str) -> None:
         """COM_STMT_PREPARE_OK (writers.rs:93-120): stmt id, column count
@@ -710,20 +720,9 @@ class _MyConn(socketserver.StreamRequestHandler):
                         v += 2**64
                     params.append(v)
         st["long_data"].clear()
-        bound = substitute_placeholders(st["sql"], params)
-        with engine.track_query(bound, interface="mysql"):
-            df = engine.sql(bound)
-            if df is None or not df.columns:
-                pio.send(build_ok())
-                return
-            cols = [
-                ("", f.name) + spark_type_to_mysql(f.dataType)
-                for f in df.schema.fields
-            ]
-            self._send_resultset(
-                pio, cols, (tuple(r) for r in df.toLocalIterator(prefetchPartitions=True)),
-                binary=True,
-            )
+        self._execute(
+            pio, engine, substitute_placeholders(st["sql"], params), binary=True
+        )
 
     def _send_resultset(
         self,
@@ -732,8 +731,9 @@ class _MyConn(socketserver.StreamRequestHandler):
         rows: Iterable[tuple],
         binary: bool = False,
     ) -> None:
-        """resultset.rs:139-349 start/write_row/finish over the text
-        protocol: column count, definitions, EOF, rows, EOF.
+        """resultset.rs:139-349 start/write_row over the text protocol:
+        column count, definitions, EOF, rows.  The caller sends the closing
+        EOF (finish).
 
         Polls the kill flag every few thousand rows (the shared
         engine.kill_checked helper): a KILL QUERY from another
@@ -765,7 +765,6 @@ class _MyConn(socketserver.StreamRequestHandler):
                 for v in row:
                     encode_text_value(out, v)
             pio.send(bytes(out))
-        pio.send(build_eof())
 
 
 def parse_handshake_response(payload: bytes) -> dict:

@@ -1680,3 +1680,88 @@ def test_pq_topk_batch_size_invariant(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     assert small == big
+
+
+def _ann_entry_points(spark, emb, q, idx):
+    """Every numpy-side ANN search path over ``emb``/``q``; ``idx`` holds a
+    persisted IVF-PQ index of ``emb`` (built here) and of an IVF one."""
+    similarity.build_ivfpq_index(emb, f"{idx}/ivfpq", n_centroids=16)
+    similarity.build_ivf_index(emb, f"{idx}/ivf", n_centroids=16)
+    return {
+        "brute_force_topk": lambda: similarity.brute_force_topk(emb, q, k=5),
+        "pq_topk": lambda: similarity.pq_topk(emb, q, k=5),
+        "ivfpq_topk": lambda: similarity.ivfpq_topk(
+            emb, q, k=5, n_centroids=16, nprobe=8
+        ),
+        "ivfpq_search_indexed": lambda: similarity.ivfpq_search_indexed(
+            spark, f"{idx}/ivfpq", emb, q, k=5, nprobe=8
+        ),
+        "ivf_search_indexed": lambda: similarity.ivf_search_indexed(
+            spark, f"{idx}/ivf", q, k=5, nprobe=8
+        ),
+    }
+
+
+@pytest.mark.parametrize("id_type", ["string", "decimal(20,0)"])
+def test_ann_ids_keep_input_type(spark, tmp_path, id_type):
+    """q_id/c_id take their type from the input schemas: string and decimal
+    ids give the long-id results once mapped back (the string cast keeps
+    md5(cast(id as string)), so training sees the same sample order)."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+    want = _ann_entry_points(spark, emb, q, tmp_path / "long")
+    cast_emb, cast_q = (
+        df.withColumn("vec_id", F.col("vec_id").cast(id_type)) for df in (emb, q)
+    )
+    got = _ann_entry_points(spark, cast_emb, cast_q, tmp_path / "cast")
+    id_dt = cast_emb.schema["vec_id"].dataType
+    for name, run in got.items():
+        df = run()
+        assert df.schema["q_id"].dataType == id_dt, name
+        assert df.schema["c_id"].dataType == id_dt, name
+        rows = sorted(
+            (int(r.q_id), int(r.c_id), r.rank, r.cos) for r in df.collect()
+        )
+        assert rows and rows == sorted(tuple(r) for r in want[name]().collect()), name
+
+
+def test_ann_empty_query_set(spark, tmp_path):
+    """An empty query set returns no rows with the normal result schema."""
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+    normal = _ann_entry_points(spark, emb, q, tmp_path / "a")
+    empty = _ann_entry_points(spark, emb, q.filter(F.lit(False)), tmp_path / "b")
+    for name, run in empty.items():
+        df = run()
+        assert df.collect() == [], name
+        assert df.schema == normal[name]().schema, name
+
+
+def test_ann_driver_jobs(spark, tmp_path):
+    """Spark jobs each search path runs while BUILDING its DataFrame: the
+    query set is collected once (PQ's collect also carries the training
+    sample; IVF-PQ's training sample is its own job; reading a persisted
+    index infers its parquet schema in one job) — the indexed IVF-PQ
+    search used to collect the same query rows twice."""
+    import uuid
+
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+    sc = spark.sparkContext
+    counts = {}
+    for name, run in _ann_entry_points(spark, emb, q, tmp_path).items():
+        group = f"ann-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counts[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts == {
+        "brute_force_topk": 1,
+        "pq_topk": 1,
+        "ivfpq_topk": 2,
+        "ivfpq_search_indexed": 2,
+        "ivf_search_indexed": 2,
+    }
