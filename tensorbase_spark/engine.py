@@ -32,9 +32,20 @@ Partition keys: the reference stores a partition expression string and JIT
 compiles it with cranelift at insert time (mgmt.rs:408-469).  Here the
 expression becomes a generated ``__ptk`` column computed with built-in
 expressions at insert (functions/clickhouse.py) and a Hive-style partition
-directory — so partition pruning is native directory pruning, and the
-WHERE-rewrite in _derive_ptk_predicate ports the parse_where semantics
-(crates/lang/src/parse.rs:539-862) for predicates on the *source* column.
+directory — so partition pruning is native directory pruning.  The
+WHERE-rewrite (_add_ptk_predicates, _derive_ptk_predicate) ports the
+parse_where semantics (crates/lang/src/parse.rs:539-862) and ANDs a
+``__ptk`` predicate into the outermost WHERE only where it is implied:
+- only the depth-0 AND conjuncts of that WHERE count (strings and comments
+  skipped, ``BETWEEN … AND …`` one conjunct); a depth-0 OR derives nothing;
+- only tables named in that statement's FROM/JOIN get one — a table inside
+  a subquery may not project ``__ptk``;
+- a conjunct counts only when it is WHOLLY ``col OP literal``,
+  ``col BETWEEN lit AND lit`` or ``col IN (lits)`` on the source column,
+  or the table's partition expression (``rem(a, 100)``, ``toYYYYMM(d)``,
+  or translate_sql's ``(a % 100)``) compared to an integer literal;
+- ``rem`` is non-monotonic, so a source-column literal maps through it
+  for ``=``/``IN`` only, with Spark's ``%`` sign rule.
 """
 
 from __future__ import annotations
@@ -1401,6 +1412,12 @@ def translate_sql(sql: str) -> str:
                 out.append(f"cast({args[0]})")
                 i = j
                 continue
+            if name.lower() == "count" and not args:
+                # ClickHouse's bare count() is count(*); Spark requires
+                # an argument
+                out.append(f"{name}(*)")
+                i = j
+                continue
             tmpl = CH_SQL_TEMPLATES.get(name.lower())
             # Generic ClickHouse -If combinator: <Agg>If(args..., cond) works
             # on EVERY aggregate in CH.  When no explicit template exists
@@ -1483,17 +1500,211 @@ def translate_sql(sql: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _parse_literal_date(lit: str):
-    s = lit.strip().strip("'\"")
+def _depth0_skeleton(sql: str) -> str:
+    """``sql`` with every string literal and quoted identifier filled with
+    ``\\x01``, comments blanked, and the contents of each parenthesized
+    group blanked (the depth-0 parens themselves stay).  Same length as
+    ``sql``, so a regex match on the skeleton is a depth-0 match outside
+    strings and comments at the same offsets of the original text."""
+    out = list(sql)
+    depth, i, n = 0, 0, len(sql)
+    while i < n:
+        ch = sql[i]
+        if ch in "'\"`":
+            j = i + 1
+            while j < n and sql[j] != ch:
+                j += 2 if sql[j] == "\\" and ch != "`" else 1
+            end, fill = min(j + 1, n), "\x01"
+        elif sql.startswith("--", i):
+            end, fill = sql.find("\n", i), " "
+            end = n if end < 0 else end
+        elif sql.startswith("/*", i):
+            end, fill = sql.find("*/", i + 2), " "
+            end = n if end < 0 else end + 2
+        else:
+            if ch == ")" and depth:
+                depth -= 1
+            if depth:
+                out[i] = " "
+            if ch == "(":
+                depth += 1
+            i += 1
+            continue
+        out[i:end] = (fill if depth == 0 else " ") * (end - i)
+        i = end
+    return "".join(out)
+
+
+_CONJ_WORD_RE = re.compile(r"(?i)\b(and|or|between|case|end)\b")
+
+
+def _top_conjuncts(where: str) -> list[str] | None:
+    """The depth-0 AND conjuncts of a WHERE condition, outside strings and
+    comments.  ``x BETWEEN a AND b`` and ``CASE … END`` stay whole, and a
+    conjunct wrapped in parentheses is split again.  None when a depth-0
+    OR makes the condition a disjunction: then no conjunct holds on every
+    selected row."""
+    sk = _depth0_skeleton(where)
+    spans, start, cases, between = [], 0, 0, False
+    for m in _CONJ_WORD_RE.finditer(sk):
+        w = m.group(1).lower()
+        if w == "case":
+            cases += 1
+        elif w == "end":
+            cases = max(cases - 1, 0)
+        elif cases:
+            continue
+        elif w == "or":
+            return None
+        elif w == "between":
+            between = True
+        elif between:
+            between = False
+        else:
+            spans.append((start, m.start()))
+            start = m.end()
+    spans.append((start, len(where)))
+    out: list[str] = []
+    for a, b in spans:
+        seg = sk[a:b]
+        lo, hi = a + len(seg) - len(seg.lstrip()), a + len(seg.rstrip())
+        if lo == hi:
+            continue
+        if sk[lo] == "(" and sk.find(")", lo) == hi - 1:
+            out += _top_conjuncts(where[lo + 1 : hi - 1]) or []
+        else:
+            out.append(where[lo:hi])
+    return out
+
+
+_PTK_LIT = r"(?:(?:date|timestamp)\s*)?'(?:[^'\\]|\\.|'')*'|-?\d+(?:\.\d+)?"
+_PTK_CMP_RE = re.compile(
+    rf"(?is)(?P<lhs>.+?)\s*(?P<op>==|=|<=|>=|<>|!=|<|>)\s*(?P<v>{_PTK_LIT})"
+)
+_PTK_BETWEEN_RE = re.compile(
+    rf"(?is)(?P<lhs>.+?)\s+between\s+(?P<lo>{_PTK_LIT})\s+and\s+(?P<hi>{_PTK_LIT})"
+)
+_PTK_IN_RE = re.compile(
+    rf"(?is)(?P<lhs>.+?)\s+in\s*\(\s*(?P<vs>(?:{_PTK_LIT})(?:\s*,\s*(?:{_PTK_LIT}))*)\s*\)"
+)
+_PTK_LIT_RE = re.compile(rf"(?is){_PTK_LIT}")
+# strict bounds weaken: __ptk is the expression cast to bigint, which
+# truncates a fractional value, and a date function is non-injective
+_PTK_OPS = {"=": "=", "==": "=", "<": "<=", "<=": "<=", ">": ">=", ">=": ">="}
+
+
+def _literal_value(lit: str):
+    """int for an integer literal (quoted or not), datetime for a date or
+    timestamp string, else None."""
+    lit = lit.strip()
+    if lit[0] in "-0123456789":
+        return int(lit) if re.fullmatch(r"-?\d+", lit) else None
+    s = re.sub(r"(?is)^(?:date|timestamp)\s*", "", lit)[1:-1].strip()
+    if re.fullmatch(r"-?\d+", s):
+        return int(s)
     for fmt in ("%Y-%m-%d %H:%M:%S", "%Y-%m-%d"):
         try:
             return _dt.datetime.strptime(s, fmt)
         except ValueError:
             continue
-    try:
-        return int(s)
-    except ValueError:
+    return None
+
+
+def _norm_expr(e: str) -> str:
+    return re.sub(r"\s+", "", _strip_outer_parens(e)).lower()
+
+
+def _derive_ptk_predicate(
+    spec: PartitionSpec,
+    where_sql: str,
+    names: tuple[str, ...] = (),
+    shared: bool = False,
+) -> str | None:
+    """A ``__ptk`` predicate implied by ``where_sql`` (AND it in), or None.
+
+    Only the depth-0 AND conjuncts of the condition are used (strings and
+    comments skipped, ``BETWEEN … AND …`` one conjunct); a depth-0 OR
+    derives nothing.  A conjunct counts only when the WHOLE conjunct is
+    one of:
+
+    - ``col OP literal``, ``col BETWEEN lit AND lit``, ``col IN (lits)``
+      on the partition source column.  The literal maps through the
+      partition function: ``rem`` is non-monotonic, so it maps only ``=``
+      and ``IN``, and a negative literal takes Spark's ``%`` sign (the
+      dividend's); the date functions map ranges too; any other function
+      maps nothing.
+    - the partition expression itself — as written (``rem(a, 100)``,
+      ``toYYYYMM(d)``) or as translate_sql emits it (``(a % 100)``) —
+      compared to an integer literal, with ``OP``, ``BETWEEN`` or ``IN``.
+      ``__ptk`` equals that expression on every row, so the bound carries
+      over as is.
+
+    ``<>``/``!=`` give nothing, and strict bounds weaken to ``<=``/``>=``.
+    ``names`` are the qualifiers the column may carry (the table's alias,
+    or its name).  ``shared`` means the statement reads several sources:
+    then only a qualified column is trusted (a bare one could belong to
+    another source) and the predicate qualifies ``__ptk`` with
+    ``names[0]``."""
+    conjuncts = _top_conjuncts(where_sql)
+    if not conjuncts or (shared and not names):
         return None
+    refs = [f"{q}.{spec.source_col}" for q in names]
+    if not shared:
+        refs.append(spec.source_col)
+    cols = {_norm_expr(r) for r in refs}
+    exprs: set[str] = set()
+    if spec.fn == "rem" or spec.fn in _MONOTONIC_PTK_FNS:
+        for r in refs:
+            e = f"rem({r}, {spec.rem_n})" if spec.fn == "rem" else f"{spec.fn}({r})"
+            exprs |= {_norm_expr(e), _norm_expr(translate_sql(e))}
+    ptk_ref = f"{names[0]}.{PTK_COL}" if shared else PTK_COL
+
+    def key(lhs: str, lit: str, ranged: bool):
+        """The __ptk value bounding ``lhs`` when ``lhs`` compares to
+        ``lit``; None when no sound bound exists."""
+        side = _norm_expr(lhs)
+        if side in exprs:
+            return lit if re.fullmatch(r"-?\d+", lit) else None
+        if side not in cols:
+            return None
+        if spec.fn is None:
+            return lit
+        v = _literal_value(lit)
+        if v is None:
+            return None
+        if spec.fn == "rem":
+            if ranged or not isinstance(v, int):
+                return None
+            r = abs(v) % spec.rem_n
+            return -r if v < 0 else r
+        if spec.fn not in _MONOTONIC_PTK_FNS:
+            return None
+        try:
+            if isinstance(v, int):  # int literal for a date fn: unix seconds
+                v = _dt.datetime.fromtimestamp(v, _dt.timezone.utc)
+            return _MONOTONIC_PTK_FNS[spec.fn](v)
+        except (OverflowError, OSError, ValueError):
+            return None
+
+    preds: list[str] = []
+    for c in conjuncts:
+        if m := _PTK_BETWEEN_RE.fullmatch(c):
+            lo = key(m["lhs"], m["lo"], True)
+            hi = key(m["lhs"], m["hi"], True)
+            if lo is not None and hi is not None:
+                preds.append(f"{ptk_ref} >= {lo} AND {ptk_ref} <= {hi}")
+        elif m := _PTK_IN_RE.fullmatch(c):
+            vs = [key(m["lhs"], v, False) for v in _PTK_LIT_RE.findall(m["vs"])]
+            if None not in vs:
+                preds.append(f"{ptk_ref} IN ({', '.join(map(str, vs))})")
+        elif m := _PTK_CMP_RE.fullmatch(c):
+            op = _PTK_OPS.get(m["op"])
+            v = key(m["lhs"], m["v"], op != "=") if op else None
+            if v is not None:
+                preds.append(f"{ptk_ref} {op} {v}")
+    if not preds:
+        return None
+    return " AND ".join(f"({p})" for p in preds)
 
 
 _NON_ALIAS_KEYWORDS = frozenset(
@@ -1501,67 +1712,14 @@ _NON_ALIAS_KEYWORDS = frozenset(
     "union using settings natural global all semi anti format prewhere "
     "select".split()
 )
-
-
-def _derive_ptk_predicate(
-    spec: PartitionSpec, where_sql: str, qualifier: str | None = None
-) -> str | None:
-    """Derive an AND-able __ptk predicate from simple comparisons on the
-    partition source column.  Conservative: only top-level-looking
-    ``col OP literal`` and ``col BETWEEN a AND b`` forms; strict < / >
-    weaken to <= / >= because the ptk fn is non-injective.
-
-    ``qualifier`` is set when more than one table is referenced (JOINs):
-    only ``qualifier.col`` comparisons are trusted (an unqualified column in
-    a join could belong to either side), and the emitted predicate
-    qualifies ``__ptk`` so two partitioned tables in one query stay
-    unambiguous."""
-    if qualifier:
-        col = re.escape(qualifier) + r"\." + re.escape(spec.source_col)
-        ptk_ref = f"{qualifier}.{PTK_COL}"
-    else:
-        col = re.escape(spec.source_col)
-        ptk_ref = PTK_COL
-    preds: list[str] = []
-
-    def f(lit: str):
-        v = _parse_literal_date(lit)
-        if v is None:
-            return None
-        if spec.fn is None:
-            return v if isinstance(v, int) else f"'{lit.strip().strip(chr(39))}'"
-        if spec.fn == "rem":
-            return v % spec.rem_n if isinstance(v, int) else None
-        if isinstance(v, int):  # int literal for a date fn: unix seconds
-            v = _dt.datetime.fromtimestamp(v, _dt.timezone.utc)
-        return _MONOTONIC_PTK_FNS[spec.fn](v)
-
-    for m in re.finditer(
-        rf"\b{col}\s*(=|<=|>=|<>|!=|<|>)\s*('[^']*'|[0-9][0-9.\-]*)", where_sql
-    ):
-        op, lit = m.group(1), m.group(2)
-        v = f(lit)
-        if v is None:
-            continue
-        if op == "=":
-            preds.append(f"{ptk_ref} = {v}")
-        elif op in ("<>", "!=") or spec.fn == "rem":
-            continue  # != gives no range; rem is non-monotonic
-        elif op in ("<", "<="):
-            preds.append(f"{ptk_ref} <= {v}")
-        elif op in (">", ">="):
-            preds.append(f"{ptk_ref} >= {v}")
-    for m in re.finditer(
-        rf"\b{col}\s+between\s+('[^']*'|[0-9][0-9.\-]*)\s+and\s+('[^']*'|[0-9][0-9.\-]*)",
-        where_sql,
-        re.IGNORECASE,
-    ):
-        lo, hi = f(m.group(1)), f(m.group(2))
-        if lo is not None and hi is not None and spec.fn != "rem":
-            preds.append(f"{ptk_ref} >= {lo} AND {ptk_ref} <= {hi}")
-    if not preds:
-        return None
-    return " AND ".join(f"({p})" for p in preds)
+_WHERE_END_RE = re.compile(
+    r"(?i)\b(?:group\s+by|order\s+by|sort\s+by|cluster\s+by|distribute\s+by|"
+    r"having|window|qualify|limit|offset|union|intersect|except|minus|"
+    r"settings|format)\b"
+)
+_SOURCE_RE = re.compile(
+    r"(?i)\s*([A-Za-z_][A-Za-z0-9_.]*)(?:\s+(?:as\s+)?([A-Za-z_]\w*))?"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -4689,7 +4847,10 @@ class TensorBaseEngine:
 
         df = self.spark.table(name)
         spec = self._spec_for(name)
-        ptk_pred = _derive_ptk_predicate(spec, cond) if spec else None
+        ptk_pred = (
+            _derive_ptk_predicate(spec, cond, (name.split(".")[-1], name))
+            if spec else None
+        )
         affected = df.filter(ptk_pred) if ptk_pred else df
         hit = F.coalesce(F.expr(cond), F.lit(False))
         if kind == "delete":
@@ -6325,41 +6486,49 @@ class TensorBaseEngine:
             q = self._rewrite_sample(q)
         if _DIST_AGG_RE.search(q):
             q = _rewrite_dist_aggs(q)
-        q = translate_sql(q.strip())
-        # WHERE-rewrite: for each known partitioned table referenced, derive
-        # __ptk predicates from source-column comparisons and AND them in.
-        wm = re.search(
-            r"\bwhere\b(?P<cond>.*?)(?=\bgroup\s+by\b|\border\s+by\b|\bhaving\b|\blimit\b|$)",
-            q,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not wm:
+        return self._add_ptk_predicates(translate_sql(q.strip()))
+
+    def _add_ptk_predicates(self, q: str) -> str:
+        """AND derived ``__ptk`` predicates into the outermost WHERE, one
+        per partitioned engine table that the FROM/JOIN clause of that
+        WHERE names.  Tables inside subqueries get nothing: their
+        ``__ptk`` may not be projected.  Rules: _derive_ptk_predicate."""
+        sk = _depth0_skeleton(q)
+        wm = re.search(r"(?i)\bwhere\b", sk)
+        froms = list(re.finditer(r"(?i)\bfrom\b", sk[: wm.start()])) if wm else []
+        if not froms:
             return q
-        cond = wm.group("cond")
+        src = sk[froms[-1].end() : wm.start()]
+        if re.search(r"(?i)\b(?:select|union|intersect|except|minus)\b", src):
+            return q  # a FROM-less set-operation branch owns this WHERE
+        sources = [p for p in re.split(r"(?i),|\bjoin\b", src) if p.strip()]
+        ctes = {
+            n.lower()
+            for n in re.findall(
+                r"(?i)\b([A-Za-z_]\w*)\s*(?:\(\s*\))?\s+as\s*\(",
+                sk[: froms[-1].start()],
+            )
+        }
+        em = _WHERE_END_RE.search(sk, wm.end())
+        w_end = em.start() if em else len(q)
+        cond = q[wm.end() : w_end]
         derived = []
-        # tables enter via FROM or any JOIN variant; capture the optional
-        # alias so multi-table predicates stay unambiguous (__ptk exists on
-        # every partitioned table, so the derived predicate must qualify it)
-        refs = re.findall(
-            r"\b(?:from|join)\s+([A-Za-z_][A-Za-z0-9_.]*)"
-            r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z0-9_]*))?",
-            q,
-            re.IGNORECASE,
-        )
-        multi = len(refs) > 1
-        for tbl, alias in refs:
+        for piece in sources:
+            m = _SOURCE_RE.match(piece)
+            if not m or m.group(1).lower() in ctes:
+                continue
+            tbl, alias = m.group(1), m.group(2) or ""
             if alias.lower() in _NON_ALIAS_KEYWORDS:
                 alias = ""
             spec = self._spec_for(tbl)
             if spec is None:
                 continue
-            qualifier = alias or tbl.split(".")[-1]
-            p = _derive_ptk_predicate(
-                spec, cond, qualifier=qualifier if multi else None
-            )
+            names = (alias,) if alias else (tbl.split(".")[-1], tbl)
+            p = _derive_ptk_predicate(spec, cond, names, shared=len(sources) > 1)
             if p:
                 derived.append(p)
         if not derived:
             return q
-        new_cond = f" ({cond.strip()}) AND {' AND '.join(derived)} "
-        return q[: wm.start("cond")] + new_cond + q[wm.end("cond") :]
+        # the newline ends a trailing -- comment inside the condition
+        new_cond = f" ({cond.strip()}\n) AND {' AND '.join(derived)} "
+        return q[: wm.end()] + new_cond + q[w_end:]

@@ -17,6 +17,18 @@ Design notes for 100 TB scale (tested on local[32]):
   unix seconds with a server-level TZ (crates/runtime/src/mgmt.rs:224-230);
   pinning UTC makes Spark timestamps behave identically.
 - Arrow enabled for any toPandas()/pandas_udf boundary.
+- Partition directories are listed on the driver in the local sessions
+  get_spark builds (``parallelPartitionDiscovery.threshold`` raised).  Every
+  engine INSERT ends in ``refreshTable``, which drops the file-status
+  cache, so the next full read of a table with 100 ``__ptk=`` directories
+  relisted them through a 100-task Spark job, and under ``local[N]`` those
+  tasks run on the driver JVM's own threads anyway.  Measured with
+  ``perfbench/run.py --workload ingest_mixed --seed 1 --trace 1`` on a
+  4-core host, partition pruning already in place: Spark tasks over the
+  13 traced ops 620 -> 120, jobs per op 2.62 -> 2.23, engine CPU per op
+  2275 -> 1904 ms.  tune_session does not set it: an externally supplied
+  cluster session keeps Spark's default, where the listing job spreads
+  over executors.
 """
 
 from __future__ import annotations
@@ -93,6 +105,8 @@ def get_spark(app_name: str = "tensorbase_spark", cpus: int | None = None) -> Sp
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/tbs_warehouse"))
+        # list partition directories on the driver (module docstring)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     )
     for k, v in _RUNTIME_CONFS.items():
         b = b.config(k, v)

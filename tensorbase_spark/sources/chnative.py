@@ -901,6 +901,10 @@ class _Conn(socketserver.StreamRequestHandler):
     submission is thread-safe, so the post-analysis streaming fetch runs
     outside the lock."""
 
+    # TCP_NODELAY: a reply must not wait ~40 ms for the client's delayed
+    # ACK of the previous packet
+    disable_nagle_algorithm = True
+
     @contextlib.contextmanager
     def _bind_db(self, engine):
         """Bind this connection's current database to the shared catalog
@@ -1031,6 +1035,7 @@ class _Conn(socketserver.StreamRequestHandler):
                 query, query_id=client_qid or None, interface="native"
             ):
                 self._insert_dance(r, engine, m)
+            self._send(self._eos())
             return
         # external-tables data: packets until the empty block (the reference
         # instead clears its read buffer, messages.rs:189 — same protocol
@@ -1056,57 +1061,61 @@ class _Conn(socketserver.StreamRequestHandler):
                     # (the HTTP door does the same; small results only)
                     df = engine.spark.createDataFrame(
                         df.collect(), df.schema)
-            if df is None or not df.columns:
-                self._send(self._eos())
-                return
-            try:
-                header, block_iter = df_to_block_iter(df)
-            except ValueError as e:
-                raise _WireError(23, str(e))
-            # header first, then ONE packet per block as toLocalIterator
-            # yields partitions — the full result never exists server-side
-            # (an Exception packet mid-stream remains a valid terminator
-            # if a later block fails to encode)
-            out = bytearray()
-            write_data_packet(out, header, self._compressed, server=True)
-            self._send(out)
-            srv = self.server
-            try:
-                for blk in block_iter:
-                    # a stock client's Cancel packet mid-stream stops the
-                    # result (CH answers the truncated stream with EOS);
-                    # cancel the job group too so abandoned partitions of
-                    # the local iterator stop computing
-                    if self._cancel_requested(r):
-                        engine.cancel_query(qid)
-                        break
-                    # a KILL QUERY from ANOTHER connection must truncate
-                    # this stream too — the reaper cancels the Spark jobs,
-                    # but between blocks (iterator prefetched) nothing
-                    # would raise, so poll the flag and surface CH's
-                    # QUERY_WAS_CANCELLED exception as the terminator
-                    engine.check_not_killed()
-                    data = bytearray()
-                    write_data_packet(
-                        data, blk, self._compressed, server=True)
-                    # upstream-CH interleaves Progress packets with the
-                    # result stream; negotiated revision is <= 54405, so
-                    # the layout is three varints (rows, bytes,
-                    # total_rows) — emitted rows/bytes are the telemetry
-                    # available at this sink
-                    out = bytearray()
-                    write_varint(out, SERVER_PROGRESS)
-                    write_varint(out, blk.nrows)
-                    write_varint(out, len(data))
-                    write_varint(out, 0)  # total_rows unknown (CH: 0)
-                    out += data
-                    # test observability: peak per-send buffering
-                    srv.max_result_buffer = max(
-                        getattr(srv, "max_result_buffer", 0), len(out))
-                    self._send(out)
-            except ValueError as e:
-                raise _WireError(23, str(e))
-            self._send(self._eos())
+            if df is not None and df.columns:
+                self._send_result(r, engine, qid, df)
+        # EOS only after track_query has removed the processlist entry: a
+        # client holding its whole result never sees its query still listed
+        self._send(self._eos())
+
+    def _send_result(self, r: Reader, engine, qid: str, df) -> None:
+        """Stream ``df``'s result; the caller sends the closing EOS."""
+        try:
+            header, block_iter = df_to_block_iter(df)
+        except ValueError as e:
+            raise _WireError(23, str(e))
+        # header first, then ONE packet per block as toLocalIterator
+        # yields partitions — the full result never exists server-side
+        # (an Exception packet mid-stream remains a valid terminator
+        # if a later block fails to encode)
+        out = bytearray()
+        write_data_packet(out, header, self._compressed, server=True)
+        self._send(out)
+        srv = self.server
+        try:
+            for blk in block_iter:
+                # a stock client's Cancel packet mid-stream stops the
+                # result (CH answers the truncated stream with EOS);
+                # cancel the job group too so abandoned partitions of
+                # the local iterator stop computing
+                if self._cancel_requested(r):
+                    engine.cancel_query(qid)
+                    break
+                # a KILL QUERY from ANOTHER connection must truncate
+                # this stream too — the reaper cancels the Spark jobs,
+                # but between blocks (iterator prefetched) nothing
+                # would raise, so poll the flag and surface CH's
+                # QUERY_WAS_CANCELLED exception as the terminator
+                engine.check_not_killed()
+                data = bytearray()
+                write_data_packet(
+                    data, blk, self._compressed, server=True)
+                # upstream-CH interleaves Progress packets with the
+                # result stream; negotiated revision is <= 54405, so
+                # the layout is three varints (rows, bytes,
+                # total_rows) — emitted rows/bytes are the telemetry
+                # available at this sink
+                out = bytearray()
+                write_varint(out, SERVER_PROGRESS)
+                write_varint(out, blk.nrows)
+                write_varint(out, len(data))
+                write_varint(out, 0)  # total_rows unknown (CH: 0)
+                out += data
+                # test observability: peak per-send buffering
+                srv.max_result_buffer = max(
+                    getattr(srv, "max_result_buffer", 0), len(out))
+                self._send(out)
+        except ValueError as e:
+            raise _WireError(23, str(e))
 
     def _insert_dance(self, r: Reader, engine, m: re.Match) -> None:
         """INSERT without inline rows: header -> data blocks -> empty block
@@ -1143,8 +1152,7 @@ class _Conn(socketserver.StreamRequestHandler):
         # first empty block = external-tables EOD (DataEODPInsertQuery),
         # then data blocks until the closing empty block (DataPacket)
         self._drain_external_tables(r)
-        got_any = False
-        while True:
+        while True:  # a zero-row insert is legal
             engine.check_not_killed()  # kill aborts between wire blocks
             code = r.read_varint()
             if code != CLIENT_DATA:
@@ -1152,11 +1160,7 @@ class _Conn(socketserver.StreamRequestHandler):
             blk = read_data_packet_body(r, self._compressed)
             if blk.is_empty:
                 break
-            got_any = True
             self._write_block(engine, qualified, blk, subset)
-        if not got_any:
-            pass  # zero-row insert is legal
-        self._send(self._eos())
 
     def _drain_external_tables(self, r: Reader) -> None:
         while True:
@@ -1323,6 +1327,9 @@ class NativeClient:
         # time (the server honors a non-empty hello field as this
         # connection's current_db, ConnCtx semantics)
         self._sock = socket.create_connection((host, port))
+        # the packet after a query (or a data block) must not wait for
+        # the server's delayed ACK, ~40 ms on Linux
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._rf = self._sock.makefile("rb")
         self._r = Reader(self._rf)
         self._compression = compression

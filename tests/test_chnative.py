@@ -17,7 +17,6 @@ from decimal import Decimal
 import pytest
 
 from tensorbase_spark.engine import TensorBaseEngine
-from util_drain import wait_processlist_drained
 from tensorbase_spark.sources.chnative import (
     Block,
     NativeClient,
@@ -816,7 +815,7 @@ def test_kill_truncates_native_stream_from_second_connection(engine):
         assert rows < n, "kill from second connection did not truncate"
         assert terminator == SERVER_EXCEPTION and "cancelled" in exc_text
         c.close()
-        assert wait_processlist_drained(engine) == 0
+        assert engine.sql("show processlist").count() == 0
     finally:
         srv.shutdown()
         srv.server_close()
@@ -1103,7 +1102,7 @@ def test_max_execution_time_over_native(served):
             c.execute("set max_execution_time = 0")
         _sch, rows = c.execute("select 1 as x")
         assert rows == [(1,)]
-    assert wait_processlist_drained(engine) == 0
+    assert engine.sql("show processlist").count() == 0
 
 
 def test_kill_during_native_insert(engine):
@@ -1167,7 +1166,7 @@ def test_kill_during_native_insert(engine):
             )
         n, m = rows[0]
         assert n in (3, 5) and m <= 5  # blocks after the kill never land
-        assert wait_processlist_drained(engine) == 0
+        assert engine.sql("show processlist").count() == 0
     finally:
         srv.shutdown()
         srv.server_close()
@@ -1219,4 +1218,4 @@ def test_processlist_and_kill_over_native(served):
     t.join(20)
     assert not t.is_alive()
     assert "err" in res and "out" not in res
-    assert wait_processlist_drained(engine) == 0
+    assert engine.sql("show processlist").count() == 0

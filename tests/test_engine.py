@@ -58,6 +58,14 @@ def test_translate_sql_aggregate_extras():
     assert "any_value(withdrawn)" in translate_sql("select any(withdrawn) from t")
 
 
+def test_translate_sql_bare_count(engine):
+    """ClickHouse's count() is count(*); a 'count()' string stays as is."""
+    out = translate_sql("select count() as n, 'count()' as s, count(x) from t")
+    assert out == "select count(*) as n, 'count()' as s, count(x) from t"
+    got = engine.sql("select count() as n, 'count()' as s from numbers(5)")
+    assert tuple(got.collect()[0]) == (5, "count()")
+
+
 def test_translate_sql_string_extras(spark):
     out = spark.sql(
         translate_sql(
@@ -246,6 +254,59 @@ def test_partitioned_insert_prune_and_optimize(engine, tmp_path):
     # optimize compacts without changing results
     engine.sql("optimize table ev")
     assert engine.sql("select sum(v) as s from ev").collect()[0].s == 10
+
+
+@pytest.fixture()
+def rem10(engine):
+    """``partition by rem(a, 10)`` over a in {1, 2, 3, 16} (b = a*a):
+    16 shares no partition with 1..3, so a predicate taken from the
+    wrong place in the WHERE drops rows."""
+    engine.sql("create table rp (a Int64, b Int64) partition by rem(a, 10)")
+    engine.sql("insert into rp values (1, 1), (2, 4), (3, 9), (16, 256)")
+    return engine
+
+
+@pytest.mark.parametrize(
+    "where, n",
+    [
+        ("a = 1 or a = 2", 2),  # a disjunct is not implied
+        ("b = 4 or a = 1", 2),
+        ("not (a = 1)", 3),  # a negated comparison is not implied
+        ("a = 5 + 11", 1),  # the literal is the whole right-hand side
+    ],
+)
+def test_partition_prune_only_from_top_level_conjuncts(rem10, where, n):
+    q = f"select count(*) as n from rp where {where}"
+    assert PTK_COL not in rem10._translate_query(q)
+    assert rem10.sql(q).collect()[0].n == n
+
+
+def test_partition_prune_skips_subquery_tables(rem10):
+    """The subquery projects no __ptk, so the outer WHERE must not name it."""
+    got = rem10.sql(
+        "select count(*) as n from (select a, b from rp) s where a = 1"
+    ).collect()
+    assert got[0].n == 1
+
+
+def test_alter_delete_with_disjunction_deletes_both(rem10):
+    rem10.sql("alter table rp delete where a = 1 or a = 2")
+    got = rem10.sql("select a from rp order by a").collect()
+    assert [r.a for r in got] == [3, 16]
+
+
+def test_partition_prune_on_partition_expression(rem10):
+    """The table's own partition expression, as written or as
+    translate_sql emits it, bounds __ptk exactly; a negative source literal
+    takes Spark's % sign (the dividend's), not Python's."""
+    for where in ("rem(a, 10) = 6", "a % 10 = 6", "(a % 10) in (6, 7)"):
+        q = f"select count(*) as n from rp where {where}"
+        assert f"{PTK_COL} " in rem10._translate_query(q)
+        assert rem10.sql(q).collect()[0].n == 1
+    rem10.sql("insert into rp values (-13, 169)")
+    q = "select count(*) as n from rp where a = -13"
+    assert f"{PTK_COL} = -3" in rem10._translate_query(q)
+    assert rem10.sql(q).collect()[0].n == 1
 
 
 def test_optimize_sort_by_preserves_and_sorts(engine):

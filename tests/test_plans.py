@@ -486,3 +486,46 @@ def test_param_view_binding_pushes_down(spark):
     finally:
         spark.catalog.setCurrentDatabase("default")
         eng.sql(f"drop database if exists {db}")
+
+
+def test_partition_expression_prunes_to_one_partition(spark):
+    """A WHERE on the table's own partition expression — rem(a, 100) as
+    written or as `a % 100`, toYYYYMM(d) — reaches the scan as a __ptk
+    PartitionFilter and lists one partition's files; the olap-style
+    half-open date range still prunes to its months."""
+    import re
+    import uuid
+
+    from tensorbase_spark.engine import TensorBaseEngine
+
+    eng = TensorBaseEngine(spark)
+    db = f"ptkplan_{uuid.uuid4().hex[:8]}"
+    eng.sql(f"create database {db}")
+    eng.sql(f"use {db}")
+    try:
+        eng.sql("create table pa (a UInt64, b UInt64) partition by rem(a, 100)")
+        eng.sql("insert into pa select number, number from numbers(1000)")
+        eng.sql("create table pd (d Date, v Int64) partition by toYYYYMM(d)")
+        eng.sql(
+            "insert into pd values ('2023-12-31', 1), ('2024-01-05', 2), "
+            "('2024-02-05', 3), ('2024-03-05', 4)"
+        )
+        cases = [
+            ("select count(*) as n from pa where rem(a, 100) = 7", 10, {"7"}),
+            ("select count(*) as n from pa where a % 100 = 7", 10, {"7"}),
+            ("select count(*) as n from pd where toYYYYMM(d) = 202401", 1,
+             {"202401"}),
+            ("select count(*) as n from pd where d >= '2024-01-01' "
+             "and d < '2024-03-01'", 2, {"202401", "202402", "202403"}),
+        ]
+        for sql, n, parts in cases:
+            df = eng.sql(sql)
+            assert re.search(
+                r"PartitionFilters: \[[^\]]*__ptk", _formatted(spark, df)), sql
+            read = {re.search(r"__ptk=(-?\d+)/", f).group(1)
+                    for f in df.inputFiles()}
+            assert read and read <= parts, (sql, read)
+            assert df.collect()[0].n == n, sql
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+        eng.sql(f"drop database if exists {db}")
