@@ -4,10 +4,24 @@ The reference's architecture is "thin dialect + storage shim over a general
 vectorized SQL engine" (SURVEY.md §0): a pest grammar classifies every
 command (crates/runtime/src/mgmt.rs:984-1057), meta commands are handled
 against a sled store, and SELECTs are re-parsed and executed by a vendored
-DataFusion.  This module is the same shape on Spark: a regex dispatcher
-classifies commands, meta/DDL commands run against the Spark catalog, and
-queries are dialect-translated and handed to spark.sql — Catalyst plays the
-role DataFusion plays in the reference.
+DataFusion.  This module is the same shape on Spark: meta/DDL commands run
+against the Spark catalog, and queries are dialect-translated and handed to
+spark.sql — Catalyst plays the role DataFusion plays in the reference.
+
+One lexer (_lex) stands under every dialect rewrite.  A SELECT/WITH/EXPLAIN
+statement is lexed once into masked text plus a table of opaque spans:
+- opaque: string literals ('…' and "…", with ``''`` and backslash
+  escapes), `…` quoted names, and ``/*+ … */`` hints — each becomes a
+  ``\\x00N\\x00`` placeholder indexing the table;
+- blanked: ``--`` and plain ``/* */`` comments become a space.
+Every rewrite pass then runs on the masked text, so its scanners count
+parens and match keywords without ever skipping quotes; the text is
+unmasked once, just before spark.sql.  A pass that reads a literal's value
+looks it up in the table (_unmask); a pass that emits a literal (bound
+parameters, template output, generated names) masks it into the same table
+(_mask), so no later pass can rewrite it.  Raw-text callers — SET, DDL,
+ALTER conditions, sort keys — go through the same lexer: _split_depth0 and
+translate_sql lex raw text themselves.
 
 Command surface (reference citation -> here):
 - CREATE DATABASE [IF NOT EXISTS]       mgmt.rs:473
@@ -76,6 +90,61 @@ PTK_COL = "__ptk"
 # set/unset on the process-global Hadoop configuration around insertInto
 _BLOOM_WRITE_LOCK = threading.Lock()
 
+# one opaque span or comment: a '…' or "…" literal (backslash and doubled-
+# quote escapes), a `…` quoted name (doubled-backtick escape), a -- line
+# comment, or a /* */ comment or /*+ */ hint; an unclosed one runs to the end
+_LEX_RE = re.compile(
+    r"'(?:[^'\\]|\\.|'')*(?:'|\Z)"
+    r'|"(?:[^"\\]|\\.|"")*(?:"|\Z)'
+    r"|`(?:[^`]|``)*(?:`|\Z)"
+    r"|--[^\n]*"
+    r"|/\*.*?(?:\*/|\Z)",
+    re.S,
+)
+_PLACEHOLDER_RE = re.compile(r"\x00(\d+)\x00")
+_PAREN_RE = re.compile(r"[()]")
+
+
+def _mask(text: str, lits: list[str]) -> str:
+    """``text`` with each literal, quoted name and ``/*+ … */`` hint
+    appended to ``lits`` and replaced by its ``\\x00N\\x00`` placeholder,
+    and each comment replaced by a space."""
+
+    def span(m: re.Match) -> str:
+        s = m.group(0)
+        if s.startswith("--") or (s.startswith("/*") and not s.startswith("/*+")):
+            return " "
+        lits.append(s)
+        return f"\x00{len(lits) - 1}\x00"
+
+    return _LEX_RE.sub(span, text)
+
+
+def _lex(sql: str) -> tuple[str, list[str]]:
+    """(masked text, opaque-span table) of one statement (see _mask)."""
+    lits: list[str] = []
+    return _mask(sql, lits), lits
+
+
+def _unmask(text: str, lits: list[str]) -> str:
+    """Put the opaque spans back.  An empty table masked nothing, so the
+    text — possibly masked against another table — is returned as is."""
+    if not lits:
+        return text
+    return _PLACEHOLDER_RE.sub(lambda m: lits[int(m.group(1))], text)
+
+
+def _close_paren(text: str, i: int) -> int:
+    """Index just past the ``)`` closing the ``(`` at ``i``; ``len(text) +
+    1`` when the group never closes, so ``text[i + 1 : j - 1]`` is the
+    whole inside either way.  On masked text no paren is inside a literal."""
+    depth = 0
+    for m in _PAREN_RE.finditer(text, i):
+        depth += 1 if m.group() == "(" else -1
+        if depth == 0:
+            return m.end()
+    return len(text) + 1
+
 
 def _order_col(key: str):
     """'expr [asc|desc]' fragment -> ordered Column.  The expression goes
@@ -133,30 +202,19 @@ _DIST_AGG_RE = re.compile(r"(?is)\b(topkweighted|topk|histogram|entropy)\s*\(")
 # level-1 pre-aggregation can't re-express them) — conservative: a false
 # positive only keeps the buffered single-pass form
 def _subquery_spans(text: str) -> list[tuple[int, int]]:
-    """Spans of parenthesized groups that open a nested SELECT (literals
-    must already be masked, so parens inside strings cannot mislead)."""
+    """Spans of the outermost parenthesized groups that open a nested
+    SELECT or WITH query (masked text)."""
     spans: list[tuple[int, int]] = []
-    for m in re.finditer(r"(?is)\(\s*select\b", text):
-        start = m.start()
-        if any(s <= start < e for s, e in spans):
-            continue  # already inside an outer subquery group
-        depth, j, n = 1, m.end(), len(text)
-        while j < n and depth:
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-            j += 1
-        spans.append((start, j))
+    for m in re.finditer(r"(?is)\(\s*(?:select|with)\b", text):
+        if not spans or m.start() >= spans[-1][1]:
+            spans.append((m.start(), _close_paren(text, m.start())))
     return spans
 
 
 def _sub_outside_subqueries(pat: re.Pattern, repl: str, text: str) -> str:
-    """re.sub, but matches inside nested (select ...) groups are left
-    untouched — they belong to the inner query's scope."""
+    """``pat`` matches replaced by the plain text ``repl``, except inside
+    nested queries — those belong to the inner query's scope."""
     spans = _subquery_spans(text)
-    if not spans:
-        return pat.sub(repl, text)
     return pat.sub(
         lambda m: m.group(0)
         if any(s <= m.start() < e for s, e in spans)
@@ -233,37 +291,17 @@ def _rewrite_dist_aggs(sql: str) -> str:
         return sql  # JOIN / alias / SAMPLE between FROM and GROUP BY: bail
     where_txt = re.sub(r"(?is)^where\b", "", s).strip() or None
 
-    # mask string literals so a quoted 'histogram(' can't confuse the scan
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x01{len(lits) - 1}\x01"
-
-    def _unmask(t: str) -> str:
-        return re.sub(r"\x01(\d+)\x01", lambda m: lits[int(m.group(1))], t)
-
     # The HAVING / ORDER BY tail is processed with the SAME machinery as the
     # select list (ADVICE r7 #1: a count(*) in ORDER BY must become
     # sum(__dc) too, and any other aggregate there defeats the lowering the
     # same way it does in the select list).  \x02 joins the two regions so
     # one scan covers both; parens never balance across it in valid SQL, so
     # a call spanning the boundary falls into the _paren_group bail.
-    masked = (
-        re.sub(r"'(?:[^']|'')*'", _mask, items_txt)
-        + "\x02"
-        + re.sub(r"'(?:[^']|'')*'", _mask, outer_tail)
-    )
+    both = items_txt + "\x02" + outer_tail
 
     def _paren_group(t: str, open_idx: int):
-        depth, j, n = 1, open_idx + 1, len(t)
-        while j < n and depth:
-            if t[j] == "(":
-                depth += 1
-            elif t[j] == ")":
-                depth -= 1
-            j += 1
-        return (t[open_idx + 1 : j - 1], j) if depth == 0 else (None, n)
+        j = _close_paren(t, open_idx)
+        return (t[open_idx + 1 : j - 1], j) if j <= len(t) else (None, len(t))
 
     spans: list[tuple[int, int, str]] = []
     xs: set[str] = set()
@@ -275,36 +313,36 @@ def _rewrite_dist_aggs(sql: str) -> str:
     def _norm(t: str) -> str:
         return re.sub(r"\s+", " ", t.strip().lower())
 
-    for m in _DIST_AGG_RE.finditer(masked):
+    for m in _DIST_AGG_RE.finditer(both):
         if m.start() < consumed:
             return sql  # nested dist-agg calls: keep the buffered form
         name = m.group(1).lower()
-        g1, after1 = _paren_group(masked, m.end() - 1)
+        g1, after1 = _paren_group(both, m.end() - 1)
         if g1 is None:
             return sql
         if name == "entropy":
-            args = _split_top_level_args(g1)
+            args = _split_depth0(g1)
             if len(args) != 1:
                 return sql
-            x = _unmask(args[0])
+            x = args[0]
             repl = "__entropypairs(__dv, __dc)"
         else:
             k = after1
-            while k < len(masked) and masked[k] in " \t\r\n":
+            while k < len(both) and both[k] in " \t\r\n":
                 k += 1
-            if k >= len(masked) or masked[k] != "(":
+            if k >= len(both) or both[k] != "(":
                 return sql  # parametric call without the args group
-            g2, after1 = _paren_group(masked, k)
+            g2, after1 = _paren_group(both, k)
             if g2 is None:
                 return sql
-            args = _split_top_level_args(g2)
+            args = _split_depth0(g2)
             param = g1.strip()
             if not re.fullmatch(r"\d+", param):
                 return sql
             if name == "topkweighted":
                 if len(args) != 2:
                     return sql
-                x, w = _unmask(args[0]), _unmask(args[1])
+                x, w = args
                 if w_raw is None:
                     w_raw = w
                 wsrc.add(_norm(w))
@@ -313,12 +351,12 @@ def _rewrite_dist_aggs(sql: str) -> str:
             elif name == "topk":
                 if len(args) != 1:
                     return sql
-                x = _unmask(args[0])
+                x = args[0]
                 repl = f"__topkpairs({param})(__dv, __dc)"
             else:  # histogram
                 if len(args) != 1:
                     return sql
-                x = _unmask(args[0])
+                x = args[0]
                 repl = f"__histpairs({param})(__dv, __dc)"
         if x_raw is None:
             x_raw = x
@@ -327,9 +365,9 @@ def _rewrite_dist_aggs(sql: str) -> str:
         consumed = after1
     if not spans or len(xs) != 1 or (needs_w and len(wsrc) != 1):
         return sql
-    if re.search(r"(?is)\bover\b", masked):
+    if re.search(r"(?is)\bover\b", both):
         return sql  # window over the lowered rows would change meaning
-    residue = masked
+    residue = both
     for st, en, _ in reversed(spans):
         residue = residue[:st] + " " + residue[en:]
     # count(*) is the one companion aggregate the level-1 rows re-express
@@ -342,7 +380,7 @@ def _rewrite_dist_aggs(sql: str) -> str:
     residue = _sub_outside_subqueries(count_star, " ", residue)
     if _OTHER_AGG_RE.search(residue):
         return sql
-    rewritten = masked
+    rewritten = both
     for st, en, repl in reversed(spans):
         rewritten = rewritten[:st] + repl + rewritten[en:]
     # coalesce: on an EMPTY ungrouped source count(*) is 0 while sum(__dc)
@@ -351,11 +389,7 @@ def _rewrite_dist_aggs(sql: str) -> str:
     rewritten = _sub_outside_subqueries(
         count_star, "coalesce(cast(sum(__dc) as bigint), 0)", rewritten
     )
-    # split at the region marker BEFORE unmasking: literals are still
-    # \x01N\x01 tokens here, so a literal that itself contains \x02 cannot
-    # move the split point (it reappears only after _unmask below)
     new_items, _, new_tail = rewritten.partition("\x02")
-    new_items, new_tail = _unmask(new_items), _unmask(new_tail)
 
     l1 = keys + [f"{x_raw} as __dv", "count(*) as __dc"]
     if needs_w:
@@ -379,20 +413,9 @@ def _rewrite_star_replace(sql: str) -> str:
         m = _STAR_REPLACE_RE.search(sql)
         if m is None:
             return sql
-        depth, j, n = 1, m.end(), len(sql)
-        while j < n and depth:
-            if sql[j] in "'\"":
-                q = sql[j]
-                j += 1
-                while j < n and sql[j] != q:
-                    j += 1
-            elif sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            j += 1
+        j = _close_paren(sql, m.end() - 1)
         repls = []
-        for part in _split_top_level_args(sql[m.end() : j - 1]):
+        for part in _split_depth0(sql[m.end() : j - 1]):
             rm = re.match(r"(?is)^(?P<e>.+)\s+as\s+(?P<c>\w+)\s*$", part.strip())
             if not rm:
                 raise ValueError(f"cannot parse REPLACE item: {part!r}")
@@ -415,43 +438,27 @@ def _strip_outer_parens(text: str) -> str:
     A bare ``.strip("()")`` would also eat the trailing paren of a
     function-call key — ``cityHash64(id)`` must survive intact."""
     t = text.strip()
-    while t.startswith("(") and t.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(t):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(t) - 1:
-                    return t  # outer parens don't wrap the whole string
+    while t.startswith("(") and _close_paren(t, 0) == len(t):
         t = t[1:-1].strip()
     return t
 
 
-def _split_depth0(text: str, sep: str = ",") -> list[str]:
-    out, depth, cur, i, n = [], 0, [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and text[j] != ch:
-                j += 1
-            cur.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
+def _split_depth0(text: str) -> list[str]:
+    """The depth-0 comma-separated parts of ``text``, stripped, empty ones
+    dropped.  Raw text is lexed first, so no comma or paren inside a
+    literal, quoted name or comment splits; the parts come back unmasked."""
+    masked, lits = _lex(text)
+    parts, depth, start = [], 0, 0
+    for m in re.finditer(r"[(),]", masked):
+        if m.group() == "(":
             depth += 1
-        elif ch == ")":
+        elif m.group() == ")":
             depth -= 1
-        if ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        out.append("".join(cur))
-    return [p.strip() for p in out if p.strip()]
+        elif depth == 0:
+            parts.append(masked[start : m.start()])
+            start = m.end()
+    parts.append(masked[start:])
+    return [_unmask(p, lits).strip() for p in parts if p.strip()]
 
 
 _BRACKET_KEYWORDS = frozenset(
@@ -568,21 +575,13 @@ def _preprocess_ch_clauses(sql: str) -> str:
       totals row's key columns, grouping sets render NULL — the standard
       SQL marker.
     """
-    # string literals are OPAQUE to every clause rewrite below: mask them
-    # behind \x00N\x00 placeholders first (a literal like 'from t final'
-    # must survive verbatim — property-tested in test_preprocess_props.py)
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    out = re.sub(r"'(?:[^']|'')*'|\"[^\"]*\"", _mask, sql)
+    # ``sql`` is masked (_lex): a literal like 'from t final' is a
+    # placeholder here and survives verbatim (test_preprocess_props.py).
     # ClickHouse bracket ARRAY LITERALS: `[1, 2, 3]` -> `array(1, 2, 3)`.
     # The same bracket is Spark's SUBSCRIPT (`arr[1]`) — the classic lexer
     # distinction applies: a '[' after a value (identifier, ')', ']', or a
     # masked literal) subscripts; anywhere else it opens an array literal.
-    out = _rewrite_bracket_arrays(out)
+    out = _rewrite_bracket_arrays(sql)
     # BQL/CH type names inside CAST(x AS T) / x::T (the reference's cast
     # surface, sanity_checks.rs:623-800): map to the same Spark types the
     # DDL layer uses (types.py _SIMPLE), so `cast(a as Int64)` runs
@@ -609,11 +608,10 @@ def _preprocess_ch_clauses(sql: str) -> str:
         out,
     )
     # SETTINGS ... [FORMAT x] tail (depth-0 guaranteed: both only legal at
-    # statement end; conservative regexes keep string literals intact by
-    # requiring simple ident/number tokens)
+    # statement end; each value is an ident, a number or a literal)
     out = re.sub(
-        r"(?is)\bsettings\s+[A-Za-z_][\w]*\s*=\s*[\w.'\"\x00-]+"
-        r"(?:\s*,\s*[A-Za-z_][\w]*\s*=\s*[\w.'\"\x00-]+)*\s*(?=\bformat\b|$)",
+        r"(?is)\bsettings\s+[A-Za-z_][\w]*\s*=\s*[\w.\x00-]+"
+        r"(?:\s*,\s*[A-Za-z_][\w]*\s*=\s*[\w.\x00-]+)*\s*(?=\bformat\b|$)",
         " ",
         out,
     )
@@ -693,7 +691,7 @@ def _preprocess_ch_clauses(sql: str) -> str:
             out += f" where {cond} " + rest
     if re.search(r"(?is)\bpaste\s+join\b", out):
         out = _rewrite_paste_join(out)
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], out)
+    return out
 
 
 _ARRAY_JOIN_RE = re.compile(r"(?is)\b(left\s+)?array\s+join\b")
@@ -705,32 +703,13 @@ _AJ_CLAUSE_END_RE = re.compile(
 
 
 def _scan_depth0(sql: str, start: int, match_fn):
-    """Walk ``sql`` from ``start`` at paren-depth 0 (strings and
-    parenthesized groups skipped whole); return the first regex match the
-    callable yields, or None."""
+    """Walk masked ``sql`` from ``start`` at paren-depth 0 (parenthesized
+    groups skipped whole); return the first regex match the callable
+    yields, or None."""
     i, n = start, len(sql)
     while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth, j = 1, i + 1
-            while j < n and depth:
-                if sql[j] in "'\"":
-                    q = sql[j]
-                    j += 1
-                    while j < n and sql[j] != q:
-                        j += 1
-                elif sql[j] == "(":
-                    depth += 1
-                elif sql[j] == ")":
-                    depth -= 1
-                j += 1
-            i = j
+        if sql[i] == "(":
+            i = _close_paren(sql, i)
             continue
         m = match_fn(sql, i)
         if m:
@@ -742,31 +721,6 @@ def _scan_depth0(sql: str, start: int, match_fn):
 _QUALIFY_RE = re.compile(r"(?is)\bqualify\b")
 _QUALIFY_TAIL_RE = re.compile(r"(?is)\b(order\s+by|limit|union)\b")
 _TOP_FROM_RE = re.compile(r"(?is)\bfrom\b")
-
-
-def _replace_ident_everywhere(sql: str, ident: str, repl: str) -> str:
-    """Replace bare references to ``ident`` throughout ``sql`` (string
-    literals excluded) — CH's scalar WITH aliases scope over the whole
-    query including subqueries, unlike ARRAY JOIN shadowing."""
-    pat = re.compile(rf"(?is)(?<![\w.$]){re.escape(ident)}(?![\w.$])(?!\s*\()")
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        m = pat.match(sql, i)
-        if m:
-            out.append(repl)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
 
 
 _SCALAR_WITH_ITEM_RE = re.compile(r"(?is)^(?P<e>.+?)\s+as\s+(?P<id>\w+)$")
@@ -798,9 +752,12 @@ def _rewrite_scalar_with(sql: str) -> str:
         pairs.append((sm.group("id"), sm.group("e").strip()))
     body = sql[body_m.start():]
     # later aliases may reference earlier ones (CH allows it): substitute
-    # in reverse declaration order so inner references expand too
+    # in reverse declaration order so inner references expand too.  Bare
+    # references only, subqueries included — CH's scalar WITH aliases
+    # scope over the whole query, unlike ARRAY JOIN shadowing
     for ident, expr in reversed(pairs):
-        body = _replace_ident_everywhere(body, ident, f"({expr})")
+        pat = rf"(?is)(?<![\w.$]){re.escape(ident)}(?![\w.$])(?!\s*\()"
+        body = re.sub(pat, lambda m, e=expr: f"({e})", body)
     return body
 
 
@@ -846,7 +803,7 @@ def _rewrite_qualify(sql: str) -> str:
     the equivalent plan is one wrap: the condition becomes an extra select
     item (lateral alias references and window functions are both legal
     there), an outer ``* EXCEPT`` filters on it and drops it.  Only the
-    OUTERMOST query is rewritten (depth-0 scan, quotes respected);
+    OUTERMOST query is rewritten (depth-0 scan);
     ORDER BY/LIMIT after QUALIFY stay outside the wrap, so they see the
     filtered rows — the QUALIFY contract.  Limitation: a select alias may
     not appear INSIDE the window spec of the condition (Spark forbids
@@ -886,61 +843,6 @@ def _rewrite_qualify(sql: str) -> str:
         f"select {outer_distinct}* except (__qualify) from ({inner}) "
         f"where __qualify{rest}"
     )
-
-
-def _replace_ident_outside_subqueries(sql: str, ident: str, repl: str) -> str:
-    """Replace bare (unqualified, non-call) references to ``ident`` with
-    ``repl`` everywhere except inside string literals and inside
-    subqueries — ClickHouse's unaliased ``ARRAY JOIN arr`` shadows the
-    array column ``arr`` throughout the enclosing query only.
-
-    A trailing ``.field`` is allowed to follow (and keeps following) the
-    rewritten name: ``ARRAY JOIN n`` over a Nested column must rebind
-    ``n.url`` to the exploded element's struct field (CH scoping); a
-    TABLE-alias-qualified ``t.n`` stays untouched via the lookBEHIND."""
-    pat = re.compile(rf"(?is)(?<![\w.$]){re.escape(ident)}(?![\w$])(?!\s*\()")
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            # peek: subquery gets copied verbatim, plain group is scanned
-            k = i + 1
-            while k < n and sql[k] in " \t\r\n":
-                k += 1
-            if re.match(r"(?is)(select|with)\b", sql[k:] or ""):
-                depth, j = 1, i + 1
-                while j < n and depth:
-                    if sql[j] in "'\"":
-                        q = sql[j]
-                        j += 1
-                        while j < n and sql[j] != q:
-                            j += 1
-                    elif sql[j] == "(":
-                        depth += 1
-                    elif sql[j] == ")":
-                        depth -= 1
-                    j += 1
-                out.append(sql[i:j])
-                i = j
-                continue
-            out.append(ch)
-            i += 1
-            continue
-        m = pat.match(sql, i)
-        if m:
-            out.append(repl)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
 
 
 def _split_alias(item: str):
@@ -1007,7 +909,14 @@ def _rewrite_array_join(sql: str) -> str:
     head, tail = sql[: m.start()], sql[end:]
     if bare_renames:
         for ident, alias in bare_renames:
-            new_head = _replace_ident_outside_subqueries(head, ident, alias)
+            # references to the bare name rebind to the exploded value
+            # everywhere but inside subqueries; a trailing ``.field`` keeps
+            # following it (``ARRAY JOIN n`` over a Nested column rebinds
+            # ``n.url``), a qualified ``t.n`` stays untouched
+            pat = re.compile(
+                rf"(?is)(?<![\w.$]){re.escape(ident)}(?![\w$])(?!\s*\()"
+            )
+            new_head = _sub_outside_subqueries(pat, alias, head)
             # select-list items that are exactly the bare ident keep the
             # user-visible column name: `arr` -> `__aj0 AS arr`
             sm = re.match(r"(?is)^(\s*select\s+(?:distinct\s+)?)(.*)$", new_head, re.DOTALL)
@@ -1023,7 +932,7 @@ def _rewrite_array_join(sql: str) -> str:
                 ]
                 new_head = lead + ", ".join(parts) + " " + rest
             head = new_head
-            tail = _replace_ident_outside_subqueries(tail, ident, alias)
+            tail = _sub_outside_subqueries(pat, alias, tail)
     # recurse: ClickHouse allows at most one ARRAY JOIN clause, but the
     # rewrite is cheap to re-check and idempotent on the emitted text
     return _rewrite_array_join(head.rstrip() + lateral + tail.lstrip())
@@ -1067,21 +976,11 @@ def _rewrite_paste_join(sql: str) -> str:
             i -= 1
         if i < 0:
             raise ValueError("PASTE JOIN: unbalanced left subquery")
-        # scan FORWARD from the '(' at m.end()-1 to its matching ')'
-        depth, j = 0, m.end() - 1
-        n = len(sql)
-        while j < n:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= n:
+        j = _close_paren(sql, m.end() - 1)
+        if j > len(sql):
             raise ValueError("PASTE JOIN: unbalanced right subquery")
         left_body = sql[i + 1 : m.start()].strip()
-        right_body = sql[m.end() : j].strip()
+        right_body = sql[m.end() : j - 1].strip()
         sides = []
         for side, body in (("left", left_body), ("right", right_body)):
             om = _TRAILING_ORDER_RE.search(body)
@@ -1105,48 +1004,21 @@ def _rewrite_paste_join(sql: str) -> str:
             f"(select *, row_number() over (order by {rk}) as __pj_r "
             f"from ({rb})) __pr on __pl.__pj_l = __pr.__pj_r)"
         )
-        sql = sql[:i] + repl + sql[j + 1 :]
+        sql = sql[:i] + repl + sql[j:]
 
 
 _LIMIT_BY_RE = re.compile(r"(?is)\blimit\s+(\d+)\s+by\s+")
+# the keys of a statement's trailing ORDER BY (calls nest one level deep)
+_ORDER_TAIL_RE = re.compile(r"(?is)\border\s+by\b(?P<keys>(?:[^()]|\([^()]*\))*)$")
 
 
 def _extract_limit_by(sql: str):
     """Detect a top-level ClickHouse `LIMIT n BY col[, ...] [LIMIT m]` tail.
 
     Returns (base_sql, n, by_cols, order_keys, final_limit) or None.  Only
-    the outermost query is rewritten (depth-0 scan, quotes respected); an
-    ORDER BY is required so per-group selection is deterministic."""
-    # depth-0 scan to find the clause outside subqueries/strings
-    i, n_len, m = 0, len(sql), None
-    while i < n_len:
-        ch = sql[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n_len and sql[j] != ch:
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth = 1
-            j = i + 1
-            while j < n_len and depth:
-                if sql[j] in "'\"":
-                    q = sql[j]
-                    j += 1
-                    while j < n_len and sql[j] != q:
-                        j += 1
-                elif sql[j] == "(":
-                    depth += 1
-                elif sql[j] == ")":
-                    depth -= 1
-                j += 1
-            i = j
-            continue
-        m = _LIMIT_BY_RE.match(sql, i)
-        if m:
-            break
-        i += 1
+    the outermost query is rewritten (depth-0 scan); an ORDER BY is
+    required so per-group selection is deterministic."""
+    m = _scan_depth0(sql, 0, _LIMIT_BY_RE.match)
     if not m:
         return None
     n_per_group = int(m.group(1))
@@ -1160,9 +1032,7 @@ def _extract_limit_by(sql: str):
     if not by_cols:
         raise ValueError("LIMIT BY: empty column list")
     base = sql[: m.start()].rstrip()
-    om = re.search(
-        r"(?is)\border\s+by\b(?P<keys>(?:[^()']|'[^']*'|\([^()]*\))*)$", base
-    )
+    om = _ORDER_TAIL_RE.search(base)
     if not om:
         raise ValueError(
             "LIMIT BY requires an ORDER BY for deterministic per-group rows"
@@ -1180,36 +1050,36 @@ _SAMPLE_RE = re.compile(
 _WITH_FILL_RE = re.compile(
     r"(?is)\border\s+by\s+(?P<col>[A-Za-z_][\w]*)\s+(?P<dir>asc\s+|desc\s+)?"
     r"with\s+fill"
-    r"(?:\s+from\s+(?P<frm>-?\d+|(?:date\s*)?'[^']*'))?"
-    r"(?:\s+to\s+(?P<to>-?\d+|(?:date\s*)?'[^']*'))?"
+    r"(?:\s+from\s+(?P<frm>-?\d+|(?:date\s*)?\x00\d+\x00))?"
+    r"(?:\s+to\s+(?P<to>-?\d+|(?:date\s*)?\x00\d+\x00))?"
     r"(?:\s+step\s+(?P<step>-?\d+|interval\s+-?\d+\s+\w+))?"
     r"(?:\s+interpolate\s*\((?P<interp>[^()]*)\))?\s*$"
 )
 
 
-def _fill_bound(raw: str | None):
-    """FROM/TO bound: int, or a date/timestamp literal string."""
+def _fill_bound(raw: str | None, lits: list[str]):
+    """FROM/TO bound: int, or a date/timestamp literal's string value."""
     if raw is None:
         return None
     raw = raw.strip()
     if re.match(r"^-?\d+$", raw):
         return int(raw)
-    return re.sub(r"(?is)^date\s*", "", raw).strip("'")
+    return _unmask(re.sub(r"(?is)^date\s*", "", raw), lits).strip("'")
 
 
-def _extract_with_fill(sql: str):
+def _extract_with_fill(sql: str, lits: list[str]):
     """Detect a trailing ClickHouse ``ORDER BY col [ASC|DESC] WITH FILL
     [FROM a] [TO b] [STEP s] [INTERPOLATE (cols)]`` (upstream-CH
     gap-filling; the fork's grammar has only a plain order_by, bql.pest:193).
     Returns (base_sql, col, desc, frm, to, step, interp_cols) or None.  One
     integer fill column supported — the common time-bucket shape;
     INTERPOLATE columns carry the previous row's value forward instead of
-    taking the type default."""
+    taking the type default.  ``sql`` is masked; ``lits`` its table."""
     m = _WITH_FILL_RE.search(sql)
     if not m:
         return None
-    frm = _fill_bound(m.group("frm"))
-    to = _fill_bound(m.group("to"))
+    frm = _fill_bound(m.group("frm"), lits)
+    to = _fill_bound(m.group("to"), lits)
     step_raw = m.group("step")
     step: int | tuple
     if step_raw is None:
@@ -1300,50 +1170,22 @@ _SQL_KEYWORDS = frozenset(
 )
 
 
-def _split_top_level_args(s: str) -> list[str]:
-    args, depth, cur, in_str = [], 0, [], None
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in "'\"":
-            in_str = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        args.append(tail)
-    return args
-
-
-def translate_sql(sql: str) -> str:
+def translate_sql(sql: str, lits: list[str] | None = None) -> str:
     """Rewrite ClickHouse function names to Spark SQL equivalents, innermost
     calls first, string literals untouched.  Unknown names pass through —
     Spark SQL's own surface (abs, concat, md5, ...) is a superset of the
-    DataFusion builtins the reference exposes (SURVEY §2.6)."""
+    DataFusion builtins the reference exposes (SURVEY §2.6).
+
+    ``sql`` is raw text (lexed here), or masked text with its table
+    ``lits`` (the engine's query path; the result stays masked).  Each
+    template sees its arguments unmasked, and its output is masked back
+    into ``lits`` so no later pass reads inside a literal it emits."""
+    if lits is None:
+        masked, lits = _lex(sql)
+        return _unmask(translate_sql(masked, lits), lits)
     out = []
     i, n = 0, len(sql)
     while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
         m = _IDENT_CALL.match(sql, i)
         if m and m.group(0)[:-1].strip().lower() in _SQL_KEYWORDS:
             # keyword + '(' is not a call: emit the keyword verbatim and let
@@ -1354,21 +1196,10 @@ def translate_sql(sql: str) -> str:
             continue
         if m:
             name = m.group(0)[:-1].strip()
-            # find matching close paren
-            depth, j = 1, m.end()
-            while j < n and depth:
-                if sql[j] in "'\"":
-                    q = sql[j]
-                    j += 1
-                    while j < n and sql[j] != q:
-                        j += 1
-                elif sql[j] == "(":
-                    depth += 1
-                elif sql[j] == ")":
-                    depth -= 1
-                j += 1
+            j = _close_paren(sql, m.end() - 1)
             inner = sql[m.end() : j - 1]
-            args = [translate_sql(a) for a in _split_top_level_args(inner)]
+            args = [translate_sql(a, lits) for a in _split_depth0(inner)]
+            raw = [_unmask(a, lits) for a in args]
             # ClickHouse parametric-aggregate call shape: name(params)(args)
             # — quantile(0.5)(x), quantiles(0.25, 0.75)(x).  Only names in
             # the parametric table consume the second group.
@@ -1378,23 +1209,12 @@ def translate_sql(sql: str) -> str:
                 while k < n and sql[k] in " \t\r\n":
                     k += 1
                 if k < n and sql[k] == "(":
-                    depth2, j2 = 1, k + 1
-                    while j2 < n and depth2:
-                        if sql[j2] in "'\"":
-                            q = sql[j2]
-                            j2 += 1
-                            while j2 < n and sql[j2] != q:
-                                j2 += 1
-                        elif sql[j2] == "(":
-                            depth2 += 1
-                        elif sql[j2] == ")":
-                            depth2 -= 1
-                        j2 += 1
-                    inner2 = sql[k + 1 : j2 - 1]
+                    j2 = _close_paren(sql, k)
                     args2 = [
-                        translate_sql(a) for a in _split_top_level_args(inner2)
+                        _unmask(translate_sql(a, lits), lits)
+                        for a in _split_depth0(sql[k + 1 : j2 - 1])
                     ]
-                    out.append(ptmpl(args, args2))
+                    out.append(_mask(ptmpl(raw, args2), lits))
                     i = j2
                     continue
             if name.lower() == "cast" and len(args) == 1:
@@ -1430,7 +1250,7 @@ def translate_sql(sql: str) -> str:
                 if stem.lower() in CH_SQL_TEMPLATES or stem.lower() in (
                     "count", "sum", "avg", "min", "max", "stddev", "corr"
                 ):
-                    stem_sql = translate_sql(f"{stem}({', '.join(args[:-1])})")
+                    stem_sql = translate_sql(f"{stem}({', '.join(args[:-1])})", lits)
                     out.append(f"{stem_sql} filter (where {args[-1]})")
                     i = j
                     continue
@@ -1451,8 +1271,8 @@ def translate_sql(sql: str) -> str:
                 if known:
                     kind2 = sfx.group(1).lower()
                     if kind2 == "distinct":
-                        inner2 = translate_sql(", ".join(args))
-                        stem_sql = translate_sql(f"{stem}(__D__)").replace(
+                        inner2 = translate_sql(", ".join(args), lits)
+                        stem_sql = translate_sql(f"{stem}(__D__)", lits).replace(
                             "__D__", f"distinct {inner2}"
                         )
                         # uniq*-style stems already emit DISTINCT — the
@@ -1462,7 +1282,7 @@ def translate_sql(sql: str) -> str:
                         )
                         out.append(stem_sql)
                     else:
-                        stem_sql = translate_sql(f"{stem}({', '.join(args)})")
+                        stem_sql = translate_sql(f"{stem}({', '.join(args)})", lits)
                         if stem.lower() == "count":
                             stem_sql = f"nullif({stem_sql}, 0)"
                         if kind2 == "ornull":
@@ -1479,17 +1299,17 @@ def translate_sql(sql: str) -> str:
             ):
                 tmpl = None
             if callable(tmpl):
-                out.append(tmpl(args))
+                out.append(_mask(tmpl(raw), lits))
             elif tmpl:
                 try:
-                    out.append(tmpl.format(*args))
+                    out.append(_mask(tmpl.format(*raw), lits))
                 except IndexError:
                     out.append(f"{name}({', '.join(args)})")
             else:
                 out.append(f"{name}({', '.join(args)})")
             i = j
             continue
-        out.append(ch)
+        out.append(sql[i])
         i += 1
     return "".join(out)
 
@@ -1501,37 +1321,15 @@ def translate_sql(sql: str) -> str:
 
 
 def _depth0_skeleton(sql: str) -> str:
-    """``sql`` with every string literal and quoted identifier filled with
-    ``\\x01``, comments blanked, and the contents of each parenthesized
-    group blanked (the depth-0 parens themselves stay).  Same length as
-    ``sql``, so a regex match on the skeleton is a depth-0 match outside
-    strings and comments at the same offsets of the original text."""
-    out = list(sql)
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"`":
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 2 if sql[j] == "\\" and ch != "`" else 1
-            end, fill = min(j + 1, n), "\x01"
-        elif sql.startswith("--", i):
-            end, fill = sql.find("\n", i), " "
-            end = n if end < 0 else end
-        elif sql.startswith("/*", i):
-            end, fill = sql.find("*/", i + 2), " "
-            end = n if end < 0 else end + 2
-        else:
-            if ch == ")" and depth:
-                depth -= 1
-            if depth:
-                out[i] = " "
-            if ch == "(":
-                depth += 1
-            i += 1
-            continue
-        out[i:end] = (fill if depth == 0 else " ") * (end - i)
-        i = end
+    """Masked ``sql`` with the contents of each parenthesized group blanked
+    (the depth-0 parens themselves stay).  Same length as ``sql``, so a
+    regex match on the skeleton is a depth-0 match at the same offsets of
+    the text."""
+    out, i = list(sql), sql.find("(")
+    while i >= 0:
+        j = _close_paren(sql, i)
+        out[i + 1 : j - 1] = " " * (j - i - 2)
+        i = sql.find("(", j)
     return "".join(out)
 
 
@@ -1539,11 +1337,10 @@ _CONJ_WORD_RE = re.compile(r"(?i)\b(and|or|between|case|end)\b")
 
 
 def _top_conjuncts(where: str) -> list[str] | None:
-    """The depth-0 AND conjuncts of a WHERE condition, outside strings and
-    comments.  ``x BETWEEN a AND b`` and ``CASE … END`` stay whole, and a
-    conjunct wrapped in parentheses is split again.  None when a depth-0
-    OR makes the condition a disjunction: then no conjunct holds on every
-    selected row."""
+    """The depth-0 AND conjuncts of a masked WHERE condition.  ``x BETWEEN
+    a AND b`` and ``CASE … END`` stay whole, and a conjunct wrapped in
+    parentheses is split again.  None when a depth-0 OR makes the condition
+    a disjunction: then no conjunct holds on every selected row."""
     sk = _depth0_skeleton(where)
     spans, start, cases, between = [], 0, 0, False
     for m in _CONJ_WORD_RE.finditer(sk):
@@ -1577,7 +1374,7 @@ def _top_conjuncts(where: str) -> list[str] | None:
     return out
 
 
-_PTK_LIT = r"(?:(?:date|timestamp)\s*)?'(?:[^'\\]|\\.|'')*'|-?\d+(?:\.\d+)?"
+_PTK_LIT = r"(?:(?:date|timestamp)\s*)?\x00\d+\x00|-?\d+(?:\.\d+)?"
 _PTK_CMP_RE = re.compile(
     rf"(?is)(?P<lhs>.+?)\s*(?P<op>==|=|<=|>=|<>|!=|<|>)\s*(?P<v>{_PTK_LIT})"
 )
@@ -1593,10 +1390,10 @@ _PTK_LIT_RE = re.compile(rf"(?is){_PTK_LIT}")
 _PTK_OPS = {"=": "=", "==": "=", "<": "<=", "<=": "<=", ">": ">=", ">=": ">="}
 
 
-def _literal_value(lit: str):
+def _literal_value(lit: str, lits: list[str]):
     """int for an integer literal (quoted or not), datetime for a date or
-    timestamp string, else None."""
-    lit = lit.strip()
+    timestamp string, else None.  ``lit`` is masked; ``lits`` its table."""
+    lit = _unmask(lit.strip(), lits)
     if lit[0] in "-0123456789":
         return int(lit) if re.fullmatch(r"-?\d+", lit) else None
     s = re.sub(r"(?is)^(?:date|timestamp)\s*", "", lit)[1:-1].strip()
@@ -1619,8 +1416,11 @@ def _derive_ptk_predicate(
     where_sql: str,
     names: tuple[str, ...] = (),
     shared: bool = False,
+    lits: list[str] | None = None,
 ) -> str | None:
     """A ``__ptk`` predicate implied by ``where_sql`` (AND it in), or None.
+    ``where_sql`` is raw text (lexed here), or masked with its table
+    ``lits`` (then the predicate is masked too).
 
     Only the depth-0 AND conjuncts of the condition are used (strings and
     comments skipped, ``BETWEEN … AND …`` one conjunct); a depth-0 OR
@@ -1645,6 +1445,10 @@ def _derive_ptk_predicate(
     then only a qualified column is trusted (a bare one could belong to
     another source) and the predicate qualifies ``__ptk`` with
     ``names[0]``."""
+    if lits is None:
+        where_sql, lits = _lex(where_sql)
+        p = _derive_ptk_predicate(spec, where_sql, names, shared, lits)
+        return p and _unmask(p, lits)
     conjuncts = _top_conjuncts(where_sql)
     if not conjuncts or (shared and not names):
         return None
@@ -1669,7 +1473,7 @@ def _derive_ptk_predicate(
             return None
         if spec.fn is None:
             return lit
-        v = _literal_value(lit)
+        v = _literal_value(lit, lits)
         if v is None:
             return None
         if spec.fn == "rem":
@@ -2135,7 +1939,7 @@ class TensorBaseEngine:
             )
             cols_txt = props.get("tb.columns")
             if cols_txt:
-                for pos, part in enumerate(_split_top_level_args(cols_txt), 1):
+                for pos, part in enumerate(_split_depth0(cols_txt), 1):
                     cname, ctype = part.strip().split(None, 1)
                     p = parse_bql_type(ctype)
                     crows.append(
@@ -2860,96 +2664,7 @@ class TensorBaseEngine:
                     [(exported.count(), path)], "rows_exported: long, path: string"
                 )
         if re.match(r"(?is)^(select|with|explain)\b", c):
-            # merge-engine FINAL must rewrite BEFORE preprocessing drops the
-            # plain-append FINAL fallback (idempotent; _translate_query also
-            # hooks it for inner paths like INSERT ... SELECT and MVs)
-            if re.search(r"(?is)\bfinal\b", c):
-                c = self._rewrite_final(c)
-            c = _rewrite_array_join(_preprocess_ch_clauses(c)).strip()
-            if re.search(r"(?is)\bsystem\.detached_parts\b", c):
-                self._refresh_detached_parts()
-                c = re.sub(
-                    r"(?is)\bsystem\.detached_parts\b",
-                    "global_temp.tb_system_detached_parts",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.parts\b", c):
-                self._refresh_system_parts()
-                c = re.sub(
-                    r"(?is)\bsystem\.parts\b", "global_temp.tb_system_parts", c
-                )
-            if re.search(r"(?is)\bsystem\.(tables|columns)\b", c):
-                self._refresh_system_tables()
-                c = re.sub(
-                    r"(?is)\bsystem\.(tables|columns)\b",
-                    r"global_temp.tb_system_\1",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.query_log\b", c):
-                self._refresh_query_log()
-                c = re.sub(
-                    r"(?is)\bsystem\.query_log\b",
-                    "global_temp.tb_system_query_log",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.processes\b", c):
-                # UNIQUE view per rewrite: a shared name lets a second
-                # concurrent introspection swap the snapshot between this
-                # rewrite and its analysis, breaking the never-lists-
-                # itself contract (r10 review).  Old snapshots are GC'd
-                # once a few rewrites behind (analysis binds the local
-                # relation inside this dispatch, so dropping is safe).
-                vname = f"tb_system_processes_{_uuid.uuid4().hex[:8]}"
-                self._processes_snapshot_df().createOrReplaceGlobalTempView(
-                    vname
-                )
-                with self._proc_lock:
-                    self._proc_views.append(vname)
-                    stale = (self._proc_views[:-4]
-                             if len(self._proc_views) > 4 else [])
-                    self._proc_views = self._proc_views[-4:]
-                for old in stale:
-                    try:
-                        self.spark.catalog.dropGlobalTempView(old)
-                    except Exception:
-                        pass
-                c = re.sub(
-                    r"(?is)\bsystem\.processes\b",
-                    f"global_temp.{vname}",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.settings\b", c):
-                self._refresh_system_settings()
-                c = re.sub(
-                    r"(?is)\bsystem\.settings\b",
-                    "global_temp.tb_system_settings",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.functions\b", c):
-                self._refresh_system_functions()
-                c = re.sub(
-                    r"(?is)\bsystem\.functions\b",
-                    "global_temp.tb_system_functions",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.databases\b", c):
-                self.spark.createDataFrame(
-                    [(d.name,) for d in self.spark.catalog.listDatabases()],
-                    "name string",
-                ).createOrReplaceGlobalTempView("tb_system_databases")
-                c = re.sub(
-                    r"(?is)\bsystem\.databases\b",
-                    "global_temp.tb_system_databases",
-                    c,
-                )
-            if re.search(r"(?is)\bsystem\.one\b", c):
-                # CH's 1-row ping table (dummy UInt8 = 0): clients probe
-                # liveness with `SELECT 1 FROM system.one`
-                c = re.sub(
-                    r"(?is)\bsystem\.one\b",
-                    "(select cast(0 as smallint) as dummy)",
-                    c,
-                )
+            return self._query(c)
         low = c.lower()
 
         if low.startswith("create database"):
@@ -3126,10 +2841,22 @@ class TensorBaseEngine:
                     sm.group(1), sm.group(2).strip().strip("'\"")
                 )
             return self.spark.sql("SELECT 1 AS ok")
+        if low.startswith("insert"):
+            return self._insert(c)
+        # Rule::query — everything else goes to Catalyst, like the raw SQL
+        # string re-parse in the reference (crates/engine/src/datafusions.rs:182).
+        return self._query(c)
+
+    def _query(self, c: str) -> DataFrame:
+        """One query statement: lexed once (_lex), every rewrite on the
+        masked text, unmasked once just before spark.sql."""
+        c, lits = _lex(c)
+        c = self._system_tables(self._clause_passes(c, lits).strip())
+        low = c.lower()
         if low.startswith("explain analyze"):
             # AnalyzeExec analogue (physical_plan/analyze.rs:39): execute the
             # query, then return the final (AQE-resolved) physical plan.
-            df = self.spark.sql(self._translate_query(c[len("explain analyze"):]))
+            df = self._sql(c[len("explain analyze"):], lits)
             # drain the query's own execution (like AnalyzeExec consuming and
             # discarding the stream) so the AQE-final plan is observable
             for _ in df.toLocalIterator():
@@ -3172,15 +2899,12 @@ class TensorBaseEngine:
             body = re.sub(
                 r"(?is)^\s*(plan|pipeline|syntax|ast)\b", "", c[len("explain"):]
             )
-            return self.spark.sql("EXPLAIN " + self._translate_query(body))
-        if low.startswith("insert"):
-            return self._insert(c)
-        # Rule::query — everything else goes to Catalyst, like the raw SQL
-        # string re-parse in the reference (crates/engine/src/datafusions.rs:182).
+            body = _unmask(self._translate_query(body, lits), lits)
+            return self.spark.sql("EXPLAIN " + body)
         if re.search(r"(?is)\basof\s+(left\s+)?join\b", c):
             am = self._ASOF_RE.match(c)
             if am:
-                return self._run_asof_join(am)
+                return self._run_asof_join(am, lits)
         if re.search(r"(?is)\bany\s+(left\s+|inner\s+)?join\b", c):
             c = self._rewrite_any_join(c)
         dom = re.match(
@@ -3191,46 +2915,100 @@ class TensorBaseEngine:
             # order — exactly LIMIT 1 BY cols, so it shares that plan (one
             # row_number window, one shuffle on the group key)
             base = f"select {dom.group('rest')}"
-            om = re.search(
-                r"(?is)\border\s+by\b(?P<keys>(?:[^()']|'[^']*'|\([^()]*\))*)$", base
-            )
+            om = _ORDER_TAIL_RE.search(base)
             if not om:
                 raise ValueError(
                     "DISTINCT ON requires an ORDER BY for deterministic rows"
                 )
             return self._run_limit_by(
-                base, 1, _split_depth0(dom.group("cols")),
+                lits, base, 1, _split_depth0(dom.group("cols")),
                 _split_depth0(om.group("keys")), None,
             )
         lb = _extract_limit_by(c)
         if lb is not None:
-            return self._run_limit_by(*lb)
-        wf = _extract_with_fill(c)
+            return self._run_limit_by(lits, *lb)
+        wf = _extract_with_fill(c, lits)
         if wf is not None:
-            return self._run_with_fill(*wf)
-        return self.spark.sql(self._translate_query(c))
+            return self._run_with_fill(lits, *wf)
+        return self._sql(c, lits)
 
-    def _run_limit_by(self, base_sql, n, by_cols, order_keys, final_limit):
+    def _sql(self, q: str, lits: list[str]) -> DataFrame:
+        """spark.sql over masked query text: translated, then unmasked."""
+        return self.spark.sql(_unmask(self._translate_query(q, lits), lits))
+
+    def _system_tables(self, c: str) -> str:
+        """``system.*`` references -> the engine's freshly built snapshot
+        views (masked text: a literal that names one stays as it is)."""
+        for names, refresh in (
+            ("detached_parts", self._refresh_detached_parts),
+            ("parts", self._refresh_system_parts),
+            ("tables|columns", self._refresh_system_tables),
+            ("query_log", self._refresh_query_log),
+            ("settings", self._refresh_system_settings),
+            ("functions", self._refresh_system_functions),
+            ("databases", self._refresh_system_databases),
+        ):
+            pat = re.compile(rf"(?is)\bsystem\.({names})\b")
+            if pat.search(c):
+                refresh()
+                c = pat.sub(
+                    lambda m: f"global_temp.tb_system_{m.group(1).lower()}", c
+                )
+        if re.search(r"(?is)\bsystem\.processes\b", c):
+            # UNIQUE view per rewrite: a shared name lets a second
+            # concurrent introspection swap the snapshot between this
+            # rewrite and its analysis, breaking the never-lists-
+            # itself contract (r10 review).  Old snapshots are GC'd
+            # once a few rewrites behind (analysis binds the local
+            # relation inside this dispatch, so dropping is safe).
+            vname = f"tb_system_processes_{_uuid.uuid4().hex[:8]}"
+            self._processes_snapshot_df().createOrReplaceGlobalTempView(vname)
+            with self._proc_lock:
+                self._proc_views.append(vname)
+                stale = (self._proc_views[:-4]
+                         if len(self._proc_views) > 4 else [])
+                self._proc_views = self._proc_views[-4:]
+            for old in stale:
+                try:
+                    self.spark.catalog.dropGlobalTempView(old)
+                except Exception:
+                    pass
+            c = re.sub(r"(?is)\bsystem\.processes\b", f"global_temp.{vname}", c)
+        # CH's 1-row ping table (dummy UInt8 = 0): clients probe liveness
+        # with `SELECT 1 FROM system.one`
+        return re.sub(
+            r"(?is)\bsystem\.one\b", "(select cast(0 as smallint) as dummy)", c
+        )
+
+    def _refresh_system_databases(self) -> None:
+        self.spark.createDataFrame(
+            [(d.name,) for d in self.spark.catalog.listDatabases()],
+            "name string",
+        ).createOrReplaceGlobalTempView("tb_system_databases")
+
+    def _run_limit_by(self, lits, base_sql, n, by_cols, order_keys, final_limit):
         """ClickHouse `LIMIT n BY cols` (upstream; the fork's grammar has
         only a plain limit, bql.pest:194): keep the first n rows per group in
         result order — top-n-per-group as a clause.  Planned as ONE window
         (row_number over the BY partition in the ORDER BY order) — a single
         shuffle on the group key; the final ORDER BY + LIMIT fuses to
         TakeOrderedAndProject.  An ORDER BY is required for determinism
-        (ClickHouse without it is arbitrary-order; the engine refuses)."""
-        df = self.spark.sql(self._translate_query(base_sql))
-        w = Window.partitionBy(*[F.expr(c) for c in by_cols]).orderBy(
-            *[_order_col(k) for k in order_keys]
-        )
+        (ClickHouse without it is arbitrary-order; the engine refuses).
+        The statement pieces are masked; ``lits`` is their table."""
+        df = self._sql(base_sql, lits)
+        order = [_order_col(_unmask(k, lits)) for k in order_keys]
+        w = Window.partitionBy(
+            *[F.expr(_unmask(c, lits)) for c in by_cols]
+        ).orderBy(*order)
         out = (
             df.withColumn("__lb_rn", F.row_number().over(w))
             .filter(F.col("__lb_rn") <= n)
             .drop("__lb_rn")
-            .orderBy(*[_order_col(k) for k in order_keys])
+            .orderBy(*order)
         )
         return out.limit(final_limit) if final_limit is not None else out
 
-    def _run_with_fill(self, base_sql, col, desc, frm, to, step, interp=()):
+    def _run_with_fill(self, lits, base_sql, col, desc, frm, to, step, interp):
         """ClickHouse ``ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]``:
         densify the fill column over an arithmetic sequence, keeping every
         original row.  FROM is inclusive, TO exclusive (CH contract); with
@@ -3244,7 +3022,7 @@ class TensorBaseEngine:
         behavior) in generated rows.  No data-sized shuffle is introduced:
         at 100 TB the aggregate under the fill has already reduced to the
         group cardinality before this join runs."""
-        df = self.spark.sql(self._translate_query(base_sql))
+        df = self._sql(base_sql, lits)
         if col not in df.columns:
             raise ValueError(f"WITH FILL column {col!r} not in result")
         dt = dict(df.dtypes)[col]
@@ -3401,7 +3179,7 @@ class TensorBaseEngine:
 
         cols: list[tuple[str, str]] = []  # (name, bql type)
         bloom_cols: list[str] = []
-        for part in _split_top_level_args(cols_text):
+        for part in _split_depth0(cols_text):
             # ClickHouse skip-index entry: INDEX name col TYPE bloom_filter
             # [GRANULARITY n] (upstream-CH; the reference has no skip
             # indexes).  Maps to parquet-native bloom filters written per
@@ -3733,7 +3511,7 @@ class TensorBaseEngine:
         cols_txt = self._table_props(name).get("tb.columns")
         if cols_txt:
             fields = []
-            for part in _split_top_level_args(cols_txt):
+            for part in _split_depth0(cols_txt):
                 cname, ctype = part.strip().split(None, 1)
                 p = parse_bql_type(ctype)
                 fields.append((cname, p.spark_type.simpleString(), p.nullable))
@@ -4026,7 +3804,7 @@ class TensorBaseEngine:
         # (temp views included) — only an explicit DB pins the database
         source = f"{dbm.group(1)}.{tm.group(1)}" if dbm else tm.group(1)
         attrs: dict[str, tuple[str, str | None]] = {}
-        for part in _split_top_level_args(m.group("cols")):
+        for part in _split_depth0(m.group("cols")):
             cm = re.match(
                 r"(?is)^\s*(?P<col>\w+)\s+(?P<typ>[\w()0-9, ]+?)"
                 r"(?:\s+default\s+(?P<dflt>.+?))?\s*$",
@@ -4072,7 +3850,7 @@ class TensorBaseEngine:
         "date": "date", "datetime": "timestamp",
     }
 
-    def _rewrite_dict_funcs(self, q: str) -> str:
+    def _rewrite_dict_funcs(self, q: str, lits: list[str]) -> str:
         """Rewrite dictGet/dictGet<Type>[OrDefault|OrNull]/dictHas calls to
         scalar-subquery map lookups (see DictionarySpec).  The lookup map is
         built from a ``GROUP BY key`` subquery, so duplicate source keys
@@ -4082,25 +3860,13 @@ class TensorBaseEngine:
             m = _DICT_CALL_RE.search(q)
             if m is None:
                 return q
-            # matching close paren, quote-aware
-            depth, j, n = 1, m.end(), len(q)
-            while j < n and depth:
-                if q[j] in "'\"":
-                    quote = q[j]
-                    j += 1
-                    while j < n and q[j] != quote:
-                        j += 1
-                elif q[j] == "(":
-                    depth += 1
-                elif q[j] == ")":
-                    depth -= 1
-                j += 1
+            j = _close_paren(q, m.end() - 1)
             fname = q[m.start() : m.end() - 1].strip().lower()
             args = [
-                self._rewrite_dict_funcs(a)
-                for a in _split_top_level_args(q[m.end() : j - 1])
+                self._rewrite_dict_funcs(a, lits)
+                for a in _split_depth0(q[m.end() : j - 1])
             ]
-            spec = self._dict_spec(args[0])
+            spec = self._dict_spec(_unmask(args[0], lits))
             if fname == "dicthas":
                 repl = (
                     f"array_contains((select collect_set({spec.key}) "
@@ -4114,7 +3880,7 @@ class TensorBaseEngine:
                 if not fm:
                     raise ValueError(f"unsupported dictionary function: {fname}")
                 typ, suffix = fm.group("typ"), fm.group("suffix")
-                attr = args[1].strip().strip("'\"")
+                attr = _unmask(args[1], lits).strip("'\"")
                 if attr not in spec.attrs:
                     raise ValueError(
                         f"dictionary {spec.name} has no attribute {attr}"
@@ -4143,7 +3909,7 @@ class TensorBaseEngine:
                     if cast_to is None:
                         raise ValueError(f"unsupported dictGet type: {typ}")
                     repl = f"cast({repl} as {cast_to})"
-            q = q[: m.start()] + repl + q[j:]
+            q = q[: m.start()] + _mask(repl, lits) + q[j:]
 
     def _propagate_mvs(self, name: str, block: DataFrame) -> None:
         """Run every materialized view registered on ``name`` over the
@@ -4355,7 +4121,7 @@ class TensorBaseEngine:
             dims.append(d.strip().lower())
         aggs: dict = {}
         sel_items = []
-        for it in _split_top_level_args(bm.group("items")):
+        for it in _split_depth0(bm.group("items")):
             s = it.strip()
             if s.lower() in dims:
                 sel_items.append(s)
@@ -4420,7 +4186,7 @@ class TensorBaseEngine:
         if not specs:
             return q
         gcols = [c.strip().lower() for c in _split_depth0(m.group("g"))]
-        items = _split_top_level_args(m.group("items"))
+        items = _split_depth0(m.group("items"))
         rest = m.group("rest") or ""
         w = m.group("w")
         for spec in specs:
@@ -4428,10 +4194,7 @@ class TensorBaseEngine:
                 continue
             if w is not None:
                 idents = {
-                    t.lower()
-                    for t in re.findall(
-                        r"[A-Za-z_]\w*", re.sub(r"'[^']*'", "", w)
-                    )
+                    t.lower() for t in re.findall(r"[A-Za-z_]\w*", w)
                 } - self._PROJ_COND_WORDS
                 if not idents <= set(spec.dims):
                     continue  # non-dim filter: partials would double-count
@@ -4498,32 +4261,13 @@ class TensorBaseEngine:
         (``sum(<hidden>.sum_x)``), which pins resolution to the input."""
         out, i, n = [], 0, len(tail)
         while i < n:
-            ch = tail[i]
-            if ch in "'\"":
-                j = i + 1
-                while j < n and tail[j] != ch:
-                    j += 1
-                out.append(tail[i : j + 1])
-                i = j + 1
-                continue
             cm = re.compile(r"[A-Za-z_]\w*\s*\(").match(tail, i)
             if cm:
-                depth, j = 1, cm.end()
-                while j < n and depth:
-                    if tail[j] in "'\"":
-                        qch = tail[j]
-                        j += 1
-                        while j < n and tail[j] != qch:
-                            j += 1
-                    elif tail[j] == "(":
-                        depth += 1
-                    elif tail[j] == ")":
-                        depth -= 1
-                    j += 1
+                j = _close_paren(tail, cm.end() - 1)
                 call = tail[i:j]
                 fname = call[: call.index("(")].strip().lower()
                 if fname == "round":
-                    parts = _split_top_level_args(call[call.index("(") + 1 : -1])
+                    parts = _split_depth0(call[call.index("(") + 1 : -1])
                     if len(parts) != 2:
                         return None
                     sub = self._merge_agg_tail(parts[0], spec, aliases)
@@ -4563,7 +4307,7 @@ class TensorBaseEngine:
                 out.append(im.group(0))
                 i = im.end()
                 continue
-            out.append(ch)
+            out.append(tail[i])
             i += 1
         return "".join(out)
 
@@ -5001,7 +4745,7 @@ class TensorBaseEngine:
         if not parsed:
             raise ValueError(f"{name}: cannot re-parse stored create script")
         _ine, _raw, cols_text, tail = parsed
-        script_parts = [p.strip() for p in _split_top_level_args(cols_text)]
+        script_parts = [p.strip() for p in _split_depth0(cols_text)]
         index_parts = [
             p for p in script_parts if p.lower().startswith("index ")
         ]
@@ -5009,7 +4753,7 @@ class TensorBaseEngine:
         # it but not the original script), index entries from the script
         cols_txt = self._table_props(name).get("tb.columns")
         col_parts = (
-            [p.strip() for p in _split_top_level_args(cols_txt)]
+            [p.strip() for p in _split_depth0(cols_txt)]
             if cols_txt
             else [p for p in script_parts if not p.lower().startswith("index ")]
         )
@@ -5366,7 +5110,7 @@ class TensorBaseEngine:
         try:
             cols_txt = self._table_props(name).get("tb.columns")
             if cols_txt:
-                for part in _split_top_level_args(cols_txt):
+                for part in _split_depth0(cols_txt):
                     toks = part.strip().split(None, 1)
                     if len(toks) == 2:
                         out[toks[0]] = parse_bql_type(toks[1])
@@ -5733,7 +5477,7 @@ class TensorBaseEngine:
         r"(?P<tail>\s+(?:where|group|order|limit)\b.*)?$"
     )
 
-    def _run_asof_join(self, m) -> DataFrame:
+    def _run_asof_join(self, m, lits: list[str]) -> DataFrame:
         """ClickHouse ``ASOF JOIN`` clause: one equality key + one ``>=``
         inequality; lowers to the union+window as-of operator
         (operators/asof.py — ONE shuffle on the key, linear scan per
@@ -5781,14 +5525,12 @@ class TensorBaseEngine:
         strip = rf"(?is)\b(?:{re.escape(la)}|{re.escape(ra)})\."
         sel = re.sub(strip, "", sel)
         tail = re.sub(strip, "", tail)
-        return self.spark.sql(
-            self._translate_query(f"select {sel} from {view}{tail}")
-        )
+        return self._sql(f"select {sel} from {view}{tail}", lits)
 
     _PARAM_RE = re.compile(r"\{(?P<n>\w+)\s*:\s*(?P<t>[^{}]+)\}")
     _PVIEW_CALL_RE = re.compile(r"(?is)\b(from|join)\s+([\w.]+)\s*\(")
 
-    def _rewrite_param_views(self, q: str, depth: int = 0) -> str:
+    def _rewrite_param_views(self, q: str, lits: list[str], depth: int = 0) -> str:
         """Upstream-CH parameterized views at their call sites:
         ``FROM v(p = 3, s = 'x')`` inlines the stored SELECT with each
         ``{p:Type}`` placeholder bound to the call's typed literal
@@ -5806,45 +5548,33 @@ class TensorBaseEngine:
             name = self._qualify(m.group(2))
             if name not in self._param_views:
                 continue
-            # paren-match the argument list from the opening '('
-            d, j, n = 1, m.end(), len(q)
-            while j < n and d:
-                if q[j] in "'\"":
-                    quote = q[j]
-                    j += 1
-                    while j < n and q[j] != quote:
-                        j += 1
-                elif q[j] == "(":
-                    d += 1
-                elif q[j] == ")":
-                    d -= 1
-                j += 1
+            j = _close_paren(q, m.end() - 1)
             args = {}
-            inner = q[m.end() : j - 1].strip()
-            for part in _split_depth0(inner) if inner else []:
+            for part in _split_depth0(q[m.end() : j - 1]):
                 am = re.match(r"(?s)^\s*(\w+)\s*=\s*(.+?)\s*$", part)
                 if not am:
                     raise ValueError(
                         f"parameterized view {name}: cannot parse "
-                        f"argument {part!r}"
+                        f"argument {_unmask(part, lits)!r}"
                     )
                 args[am.group(1)] = am.group(2).strip()
-            body = self._param_views[name]
+            body = _mask(self._param_views[name], lits)
 
             def bind(pm: re.Match) -> str:
                 pname = pm.group("n")
                 if pname not in args:
                     return pm.group(0)  # session SET param_* binds later
                 t = parse_bql_type(
-                    pm.group("t").strip()
+                    _unmask(pm.group("t"), lits).strip()
                 ).spark_type.simpleString()
                 raw = args[pname]
-                if re.fullmatch(r"-?\d+(\.\d+)?", raw) or (
-                    len(raw) >= 2 and raw[0] in "'\"" and raw[-1] == raw[0]
-                ):
-                    # bare literal -> typed, injection-safe constant
-                    v = raw.strip("'\"").replace("'", "''")
-                    return f"CAST('{v}' AS {t})"
+                lit = _PLACEHOLDER_RE.fullmatch(raw)
+                if lit and not lits[int(lit.group(1))].startswith("`"):
+                    # string literal -> typed, injection-safe constant
+                    return f"CAST({raw} AS {t})"
+                if re.fullmatch(r"-?\d+(\.\d+)?", raw):
+                    num = _mask("'" + raw + "'", lits)
+                    return f"CAST({num} AS {t})"
                 # expression argument (nested view call passing its own
                 # {p:Type}, arithmetic, a column of the outer query):
                 # inline it raw — later passes bind/translate it
@@ -5878,15 +5608,16 @@ class TensorBaseEngine:
                 alias = (f" AS {bare}" if taken == 0
                          else f" AS {bare}__{taken + 1}")
             q = f"{q[: m.start()]}{m.group(1)} ({body}){alias}{tail}"
-            return self._rewrite_param_views(q, depth + 1)
+            return self._rewrite_param_views(q, lits, depth + 1)
         return q
 
-    def _bind_query_params(self, q: str) -> str:
+    def _bind_query_params(self, q: str, lits: list[str]) -> str:
         """ClickHouse query parameters: ``{name:Type}`` placeholders bound
         from ``SET param_name = value`` (CH's prepared-statement surface).
         Each placeholder becomes CAST('value' AS <spark type>) — typed,
-        injection-safe, constant-folded by Catalyst.  String literals in
-        the query text are left untouched."""
+        injection-safe, constant-folded by Catalyst; the value literal is
+        masked into ``lits``, so no later pass rewrites it.  ``q`` is
+        masked: a placeholder spelled inside a string literal is not one."""
 
         def repl(m: re.Match) -> str:
             name = m.group("n")
@@ -5895,30 +5626,14 @@ class TensorBaseEngine:
                     f"query parameter {{{name}}} is not set "
                     f"(SET param_{name} = ...)"
                 )
-            t = parse_bql_type(m.group("t").strip()).spark_type.simpleString()
-            v = self._params[name].replace("'", "''")
-            return f"CAST('{v}' AS {t})"
+            t = _unmask(m.group("t"), lits).strip()
+            t = parse_bql_type(t).spark_type.simpleString()
+            v = _mask("'" + self._params[name].replace("'", "''") + "'", lits)
+            return f"CAST({v} AS {t})"
 
-        out, i, n = [], 0, len(q)
-        while i < n:
-            ch = q[i]
-            if ch in "'\"":
-                j = i + 1
-                while j < n and q[j] != ch:
-                    j += 1
-                out.append(q[i : j + 1])
-                i = j + 1
-                continue
-            m = self._PARAM_RE.match(q, i)
-            if m:
-                out.append(repl(m))
-                i = m.end()
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
+        return self._PARAM_RE.sub(repl, q)
 
-    def _rewrite_sample(self, q: str) -> str:
+    def _rewrite_sample(self, q: str, lits: list[str]) -> str:
         """ClickHouse ``FROM t SAMPLE k`` (upstream-CH; requires the table's
         declared sampling key — here ``SETTINGS sample_by=col``).  CH samples
         by a range over intHash32(key); the same contract re-expressed with
@@ -5956,7 +5671,9 @@ class TensorBaseEngine:
                 f"(instr('0123456789abcdef', substr({h}, 1, 1)) - 1) * 16"
                 f" + instr('0123456789abcdef', substr({h}, 2, 1)) - 1"
             )
-            return f"from (select * from {tbl} where {bucket} < {n}) {alias}"
+            return _mask(
+                f"from (select * from {tbl} where {bucket} < {n}) {alias}", lits
+            )
 
         return _SAMPLE_RE.sub(repl, q)
 
@@ -6089,7 +5806,7 @@ class TensorBaseEngine:
         r"(?P<al>\s+(?:as\s+)?(?!final\b)[A-Za-z_]\w*)?\s+final\b"
     )
 
-    def _rewrite_final(self, q: str) -> str:
+    def _rewrite_final(self, q: str, lits: list[str]) -> str:
         """``FROM t [AS a] FINAL`` over a merge-semantics table engine:
         serve the MERGE RESULT without waiting for a physical merge —
         exactly CH's FINAL contract.
@@ -6121,10 +5838,7 @@ class TensorBaseEngine:
             ) or (not key_txt or not cols_txt):
                 return m.group(0)  # fallback: generic FINAL drop downstream
             keys = [k.strip() for k in key_txt.split(",")]
-            cols = []
-            for part in _split_top_level_args(cols_txt):
-                cn, ct = part.strip().split(None, 1)
-                cols.append((cn, ct))
+            cols = [part.split(None, 1) for part in _split_depth0(cols_txt)]
             alias = (m.group("al") or "").strip()
             alias = re.sub(r"(?is)^as\s+", "", alias) or m.group("t").split(".")[-1]
             # per-partition merge, like CH: __ptk joins the merge keys
@@ -6218,11 +5932,11 @@ class TensorBaseEngine:
                     f"(select {', '.join(items)} from {name} "
                     f"group by {', '.join(pkeys)}) {alias}"
                 )
-            return f"{m.group('kw')} {inner}"
+            return f"{m.group('kw')} {_mask(inner, lits)}"
 
         return self._FINAL_REF_RE.sub(_sub, q)
 
-    def _rewrite_star_apply(self, q: str) -> str:
+    def _rewrite_star_apply(self, q: str, lits: list[str]) -> str:
         """CH column-matcher modifier ``* [EXCEPT (cols)] APPLY(f)``:
         expand to ``f(col) AS `f(col)``` per column of the (single) FROM
         table — CH's output naming exactly.  Spark has native `* EXCEPT`
@@ -6253,9 +5967,9 @@ class TensorBaseEngine:
             c for c in tcols if c != PTK_COL and c.lower() not in exc
         ]
         expanded = ", ".join(f"{fn}({c}) AS `{fn}({c})`" for c in cols)
-        return q[: m.start()] + expanded + q[m.end() :]
+        return q[: m.start()] + _mask(expanded, lits) + q[m.end() :]
 
-    def _rewrite_table_tf(self, q: str) -> str:
+    def _rewrite_table_tf(self, q: str, lits: list[str]) -> str:
         """Upstream-CH table functions in FROM/JOIN position beyond
         numbers()/remote() (the reference's grammar stops at those,
         bql.pest:133-139,349-353):
@@ -6279,19 +5993,7 @@ class TensorBaseEngine:
             m = pat.search(q)
             if not m:
                 return q
-            # paren-match from the opening '(' (last char of the match)
-            depth, j, n = 1, m.end(), len(q)
-            while j < n and depth:
-                if q[j] in "'\"":
-                    quote = q[j]
-                    j += 1
-                    while j < n and q[j] != quote:
-                        j += 1
-                elif q[j] == "(":
-                    depth += 1
-                elif q[j] == ")":
-                    depth -= 1
-                j += 1
+            j = _close_paren(q, m.end() - 1)
             inner = q[m.end() : j - 1]
             if m.group(2).lower() == "view":
                 q = f"{q[: m.start()]}{m.group(1)} ({inner}){q[j:]}"
@@ -6302,10 +6004,10 @@ class TensorBaseEngine:
                 # from xxhash64(row_id, seed) — CH's own is seeded-PRNG
                 # reproducible too), so tests and oracles can replay it.
                 # rows defaults to 1000 when no LIMIT reaches the range.
-                gargs = [a.strip() for a in _split_depth0(inner)]
+                gargs = [_unmask(a, lits) for a in _split_depth0(inner)]
                 if not gargs:
                     raise ValueError("generateRandom needs a 'schema' string")
-                gschema = gargs[0].strip().strip("'\"")
+                gschema = gargs[0].strip("'\"")
                 gseed = int(gargs[1]) if len(gargs) > 1 else 0
                 grows = int(gargs[2]) if len(gargs) > 2 else 1000
                 gdf = self.spark.range(grows)
@@ -6355,7 +6057,7 @@ class TensorBaseEngine:
                 # inference (the reference's fixed-schema model); CSV
                 # without one falls back to header/inference.
                 fargs = [
-                    a.strip().strip("'\"") for a in _split_depth0(inner)
+                    _unmask(a, lits).strip("'\"") for a in _split_depth0(inner)
                 ]
                 if not fargs:
                     raise ValueError("file()/url() needs a path")
@@ -6409,11 +6111,11 @@ class TensorBaseEngine:
                 fdf.createOrReplaceTempView(vname)
                 q = f"{q[: m.start()]}{m.group(1)} {vname}{q[j:]}"
                 continue
-            args = [a.strip() for a in _split_depth0(inner)]
+            args = [_unmask(a, lits) for a in _split_depth0(inner)]
             if len(args) == 1:
                 db, rex_txt = self.spark.catalog.currentDatabase(), args[0]
             elif len(args) == 2:
-                db_arg = args[0].strip()
+                db_arg = args[0]
                 if re.fullmatch(r"(?is)currentdatabase\s*\(\s*\)", db_arg):
                     db = self.spark.catalog.currentDatabase()
                 else:
@@ -6451,31 +6153,42 @@ class TensorBaseEngine:
             merged.createOrReplaceTempView(vname)
             q = f"{q[: m.start()]}{m.group(1)} {vname}{q[j:]}"
 
-    def _translate_query(self, q: str) -> str:
-        # clause rewrites apply on every query path (plain SELECT, EXPLAIN,
-        # INSERT ... SELECT, remote push): idempotent on already-clean text
+    def _clause_passes(self, q: str, lits: list[str]) -> str:
+        """The statement passes every query path runs first, on masked
+        text: merge-engine FINAL (before clause preprocessing drops the
+        plain-append FINAL fallback), clause preprocessing, ARRAY JOIN."""
         if re.search(r"(?is)\bfinal\b", q):
-            q = self._rewrite_final(q)
-        q = _rewrite_array_join(_preprocess_ch_clauses(q.strip()))
+            q = self._rewrite_final(q, lits)
+        return _rewrite_array_join(_preprocess_ch_clauses(q.strip()))
+
+    def _translate_query(self, q: str, lits: list[str] | None = None) -> str:
+        """Dialect-translate one query.  Raw text (INSERT ... SELECT, view
+        and MV bodies, projections) is lexed here and runs _clause_passes
+        first; masked text from _query has run them, and the result stays
+        masked for the caller to unmask."""
+        if lits is None:
+            q, lits = _lex(q)
+            q = self._translate_query(self._clause_passes(q, lits), lits)
+            return _unmask(q, lits)
         if self._param_views:
-            q = self._rewrite_param_views(q)
+            q = self._rewrite_param_views(q, lits)
         if any(self._buffer_pending.values()):
             q = self._rewrite_buffer_reads(q)
         if re.search(
             r"(?is)\b(?:from|join)\s+(?:merge|view|file|url|generaterandom)\s*\(",
             q,
         ):
-            q = self._rewrite_table_tf(q)
+            q = self._rewrite_table_tf(q, lits)
         if re.search(r"(?is)\*\s+(?:except\s*\([^()]*\)\s*)?apply\s*\(", q):
-            q = self._rewrite_star_apply(q)
+            q = self._rewrite_star_apply(q, lits)
         if re.search(r"(?is)\border\s+by\s+all\b", q):
             q = _rewrite_order_by_all(q)
         if "{" in q:
-            q = self._bind_query_params(q)
+            q = self._bind_query_params(q, lits)
         if re.match(r"(?is)^\s*with\b", q):
             q = _rewrite_scalar_with(q)
         if _DICT_CALL_RE.search(q):
-            q = self._rewrite_dict_funcs(q)
+            q = self._rewrite_dict_funcs(q, lits)
         if self._projections:
             q = self._try_projection_rewrite(q)
         if _QUALIFY_RE.search(q):
@@ -6483,16 +6196,16 @@ class TensorBaseEngine:
         if re.search(r"(?is)\bwith\s+ties\b", q):
             q = _rewrite_limit_with_ties(q)
         if re.search(r"(?is)\bsample\s", q):
-            q = self._rewrite_sample(q)
+            q = self._rewrite_sample(q, lits)
         if _DIST_AGG_RE.search(q):
             q = _rewrite_dist_aggs(q)
-        return self._add_ptk_predicates(translate_sql(q.strip()))
+        return self._add_ptk_predicates(translate_sql(q.strip(), lits), lits)
 
-    def _add_ptk_predicates(self, q: str) -> str:
-        """AND derived ``__ptk`` predicates into the outermost WHERE, one
-        per partitioned engine table that the FROM/JOIN clause of that
-        WHERE names.  Tables inside subqueries get nothing: their
-        ``__ptk`` may not be projected.  Rules: _derive_ptk_predicate."""
+    def _add_ptk_predicates(self, q: str, lits: list[str]) -> str:
+        """AND derived ``__ptk`` predicates into the outermost WHERE of
+        masked ``q``, one per partitioned engine table that the FROM/JOIN
+        clause of that WHERE names.  Tables inside subqueries get nothing:
+        their ``__ptk`` may not be projected.  Rules: _derive_ptk_predicate."""
         sk = _depth0_skeleton(q)
         wm = re.search(r"(?i)\bwhere\b", sk)
         froms = list(re.finditer(r"(?i)\bfrom\b", sk[: wm.start()])) if wm else []
@@ -6524,11 +6237,10 @@ class TensorBaseEngine:
             if spec is None:
                 continue
             names = (alias,) if alias else (tbl.split(".")[-1], tbl)
-            p = _derive_ptk_predicate(spec, cond, names, shared=len(sources) > 1)
+            p = _derive_ptk_predicate(spec, cond, names, len(sources) > 1, lits)
             if p:
                 derived.append(p)
         if not derived:
             return q
-        # the newline ends a trailing -- comment inside the condition
-        new_cond = f" ({cond.strip()}\n) AND {' AND '.join(derived)} "
+        new_cond = f" ({cond.strip()}) AND {' AND '.join(derived)} "
         return q[: wm.end()] + new_cond + q[w_end:]

@@ -1136,10 +1136,10 @@ class _Conn(socketserver.StreamRequestHandler):
         cols_txt = engine._table_props(target).get("tb.columns")
         if not cols_txt:
             raise _WireError(24, f"unknown engine table {table}")
-        from tensorbase_spark.engine import _split_top_level_args
+        from tensorbase_spark.engine import _split_depth0
 
         declared = []
-        for part in _split_top_level_args(cols_txt):
+        for part in _split_depth0(cols_txt):
             cname, ctype = part.strip().split(None, 1)
             declared.append((cname, bql_type_to_ch(ctype)))
         if subset:

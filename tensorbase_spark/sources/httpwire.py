@@ -1243,6 +1243,28 @@ def _engine_restore(eng, snap: dict) -> None:
         pass  # the request may have dropped its own database
 
 
+class _HoldLast:
+    """Response writer that holds back its most recent write until
+    release(): the last bytes of a response — the final chunk with its
+    gzip/LZ4 tail, a fixed-length or exception body, an empty 200's
+    headers — go out only once the request has left the processlist, so a
+    client holding its whole response never sees its own entry listed."""
+
+    def __init__(self, raw):
+        self.raw, self.held = raw, b""
+
+    def write(self, b) -> int:
+        if self.held:
+            self.raw.write(self.held)
+        self.held = bytes(b)
+        return len(b)
+
+    def release(self) -> None:
+        if self.held:
+            self.raw.write(self.held)
+            self.held = b""
+
+
 class _HttpHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
     server_version = "TensorBaseSparkHTTP/1.0"
@@ -1384,13 +1406,18 @@ class _HttpHandler(BaseHTTPRequestHandler):
                 # budget
                 if sess and "max_execution_time" in sess:
                     met = float(sess["max_execution_time"])
-        with eng.track_query(
-            qtext.decode("utf-8", "replace").strip(), query_id=qid,
-            user=one.get("user") or "default", interface="http",
-            max_execution_time=met,
-        ):
-            self._execute(one, combined, im, is_insert_data,
-                          stream if is_insert_data else None, head_only)
+        out, self.wfile = self.wfile, _HoldLast(self.wfile)
+        try:
+            with eng.track_query(
+                qtext.decode("utf-8", "replace").strip(), query_id=qid,
+                user=one.get("user") or "default", interface="http",
+                max_execution_time=met,
+            ):
+                self._execute(one, combined, im, is_insert_data,
+                              stream if is_insert_data else None, head_only)
+        finally:
+            held, self.wfile = self.wfile, out
+            held.release()
 
     def _execute(self, one: dict, combined: bytes, im,
                  is_insert_data: bool, stream, head_only: bool):
@@ -1643,14 +1670,14 @@ class _HttpHandler(BaseHTTPRequestHandler):
             # the Spark schema would report parquet's all-nullable and
             # desync the null-byte prefixes).  Same derivation as the
             # native protocol's INSERT dance (chnative._insert_dance).
-            from tensorbase_spark.engine import _split_top_level_args
+            from tensorbase_spark.engine import _split_depth0
             from tensorbase_spark.sources.chnative import bql_type_to_ch
 
             target = eng._resolve_alias(eng._qualify(name))
             cols_txt = eng._table_props(target).get("tb.columns")
             declared, order = {}, []
             if cols_txt:
-                for part in _split_top_level_args(cols_txt):
+                for part in _split_depth0(cols_txt):
                     cname, ctype = part.strip().split(None, 1)
                     declared[cname] = bql_type_to_ch(ctype)
                     order.append(cname)

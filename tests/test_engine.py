@@ -14,9 +14,17 @@ from pyspark.sql import functions as F
 from tensorbase_spark.engine import (
     PTK_COL,
     TensorBaseEngine,
+    _lex,
+    _unmask,
     parse_partition_expr,
     translate_sql,
 )
+
+
+def _lexed(rewrite, q: str) -> str:
+    """A rewrite pass over lexed text, as the engine's query path runs it."""
+    masked, lits = _lex(q)
+    return _unmask(rewrite(masked), lits)
 
 
 @pytest.fixture()
@@ -64,6 +72,38 @@ def test_translate_sql_bare_count(engine):
     assert out == "select count(*) as n, 'count()' as s, count(x) from t"
     got = engine.sql("select count() as n, 'count()' as s from numbers(5)")
     assert tuple(got.collect()[0]) == (5, "count()")
+
+
+@pytest.mark.parametrize(
+    "q, want",
+    [
+        ("select 'see system.one' as s", "see system.one"),
+        ("select 'from file(x)' as s", "from file(x)"),
+        ("select 'O\\'Brien toYear(d)' as s", "O'Brien toYear(d)"),
+    ],
+)
+def test_literals_reach_spark_verbatim(engine, q, want):
+    """No rewrite reads inside a string literal: system tables, table
+    functions and ``\\'`` escapes stay as written."""
+    assert engine.sql(q).collect()[0][0] == want
+
+
+def test_comment_hides_no_rewrite(engine):
+    """A -- comment (here with an apostrophe) is whitespace to every pass:
+    the function after it is still translated."""
+    row = engine.sql(
+        "select 1 as a -- it's\n, toMonth(toDate('2024-03-05')) as m"
+    ).collect()[0]
+    assert (row.a, row.m) == (1, 3)
+
+
+def test_bound_param_value_stays_verbatim(engine):
+    """A bound {name:Type} value is a literal to every later pass."""
+    engine.sql("set param_s = 'toYear(d) final'")
+    assert engine.sql("select {s:String} as v").collect()[0].v == "toYear(d) final"
+    engine.sql("set param_s = 'from t final [1] system.one'")
+    got = engine.sql("select {s:String} as v from (select 1 as d) final")
+    assert got.collect()[0].v == "from t final [1] system.one"
 
 
 def test_translate_sql_string_extras(spark):
@@ -691,7 +731,10 @@ def test_create_table_as_select(engine):
 def test_array_join_literal_and_subquery_safety():
     """The rewriter must not touch 'array join' inside string literals, and
     bare-ident shadowing must not leak into subqueries."""
-    from tensorbase_spark.engine import _rewrite_array_join as rw
+    from tensorbase_spark.engine import _rewrite_array_join
+
+    def rw(q):
+        return _lexed(_rewrite_array_join, q)
 
     sql = "select 'array join arr' as s from t"
     assert rw(sql) == sql
@@ -2653,14 +2696,15 @@ def test_dist_agg_lowering_edges(engine, spark):
         "k string, v string, w double",
     ).createOrReplaceTempView("dle_t")
     # global aggregate lowers (level-1 group by the value alone)
-    low = _rewrite_dist_aggs("select entropy(v) as e from dle_t")
+    low = _lexed(_rewrite_dist_aggs, "select entropy(v) as e from dle_t")
     assert "__entropypairs" in low and "group by v" in low
     assert abs(
         engine.sql("select round(entropy(v), 6) as e from dle_t").collect()[0].e
         - 1.5
     ) < 1e-9
     # WHERE + ORDER BY/LIMIT tail survive
-    low2 = _rewrite_dist_aggs(
+    low2 = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(2)(v) as t from dle_t where w > 1.0 "
         "group by k order by k limit 5"
     )
@@ -2671,7 +2715,8 @@ def test_dist_agg_lowering_edges(engine, spark):
     ).collect()
     assert [(r.k, r.t) for r in rows] == [("a", "x|y"), ("b", "z")]
     # a literal containing 'histogram(' is data, not a call
-    lit = _rewrite_dist_aggs(
+    lit = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(1)(v) as t, 'histogram(9)(x)' as s from dle_t group by k"
     )
     assert "__topkpairs" in lit and "'histogram(9)(x)'" in lit
@@ -2686,7 +2731,7 @@ def test_dist_agg_lowering_edges(engine, spark):
         # ... and in HAVING
         "select k, entropy(v) as e from dle_t group by k having max(w) > 1",
     ):
-        assert _rewrite_dist_aggs(q) == q
+        assert _lexed(_rewrite_dist_aggs, q) == q
 
 
 def test_dist_agg_lowering_tail_aggregates(engine, spark):
@@ -2705,7 +2750,8 @@ def test_dist_agg_lowering_tail_aggregates(engine, spark):
     # group b has 6 raw rows over 2 values — tie broken by k; with the
     # r7 bug a's pair-count (2) vs b's (2) also tied, but a 4-row vs
     # 2-pair split would reorder.  Use an asymmetric check instead:
-    low = _rewrite_dist_aggs(
+    low = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(1)(v) as t from dlt_t group by k "
         "order by count(*) desc, k limit 1"
     )
@@ -2722,7 +2768,8 @@ def test_dist_agg_lowering_tail_aggregates(engine, spark):
     ).collect()
     assert [(x.k, x.t) for x in r] == [("b", "z")]
     # HAVING count(*) lowers (VERDICT r7 #5) and filters on RAW rows
-    low2 = _rewrite_dist_aggs(
+    low2 = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(1)(v) as t from dlt_u group by k having count(*) > 3"
     )
     assert "__topkpairs" in low2 and "having coalesce(cast(sum(__dc)" in low2
@@ -2733,7 +2780,8 @@ def test_dist_agg_lowering_tail_aggregates(engine, spark):
     assert [(x.k, x.t) for x in r2] == [("b", "z")]
     # a string literal containing \x02 must not move the items/tail split
     # (the split happens on MASKED text, before literals are restored)
-    low_lit = _rewrite_dist_aggs(
+    low_lit = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(1)(v) as t, 'a\x02b' as tag from dlt_u "
         "group by k order by count(*) desc"
     )
@@ -2745,7 +2793,7 @@ def test_dist_agg_lowering_tail_aggregates(engine, spark):
     spark.createDataFrame([], "k string, v string").createOrReplaceTempView(
         "dlt_e"
     )
-    low3 = _rewrite_dist_aggs("select entropy(v) as e, count(*) as n from dlt_e")
+    low3 = _lexed(_rewrite_dist_aggs, "select entropy(v) as e, count(*) as n from dlt_e")
     assert "coalesce(cast(sum(__dc) as bigint), 0)" in low3
     assert engine.sql(
         "select count(*) as n, entropy(v) as e from dlt_e"
@@ -2770,7 +2818,7 @@ def test_dist_agg_lowering_nested_subquery_count(engine, spark):
         "select k, topK(1)(v) as t from dns_t group by k "
         "order by (select count(*) from dns_other), k"
     )
-    assert _rewrite_dist_aggs(q) == q  # bail, not a broken rewrite
+    assert _lexed(_rewrite_dist_aggs, q) == q  # bail, not a broken rewrite
     r = engine.sql(
         "select k, arrayStringConcat(topK(1)(v), '|') as t from dns_t "
         "group by k order by (select count(*) from dns_other), k"
@@ -2778,7 +2826,8 @@ def test_dist_agg_lowering_nested_subquery_count(engine, spark):
     assert [(x.k, x.t) for x in r] == [("a", "x"), ("b", "y")]
     # ... while a depth>0 count(*) in a plain FUNCTION call still lowers
     # (it is this scope's aggregate, just wrapped)
-    low = _rewrite_dist_aggs(
+    low = _lexed(
+        _rewrite_dist_aggs,
         "select k, topK(1)(v) as t, cast(count(*) as double) as n "
         "from dns_t group by k"
     )

@@ -815,6 +815,40 @@ def test_processlist_and_kill_over_http(served):
         assert rows == []
 
 
+def test_response_ends_after_processlist_exit(served):
+    """The last bytes of every response kind (final chunk, gzip tail,
+    exception body, empty 200) leave the door only after the request's
+    processlist entry is gone — deterministic here: each entry lingers
+    0.5 s before it leaves."""
+    import contextlib
+    import time as _time
+
+    eng, port = served
+    track = eng.track_query
+
+    @contextlib.contextmanager
+    def slow_exit(*a, **kw):
+        with track(*a, **kw) as qid:
+            yield qid
+            _time.sleep(0.5)
+
+    eng.track_query = slow_exit
+    try:
+        with HttpClient(port=port) as c, HttpClient(port=port) as probe:
+            for query, params in (
+                ("select 1 as x FORMAT TSV", {}),
+                ("select 2 as x FORMAT TSV", {"enable_http_compression": "1"}),
+                ("select no_such_column from numbers(1)", {}),
+                ("create table hold_t (a Int64)", {}),
+            ):
+                c.raw(query=query, params=params,
+                      headers={"Accept-Encoding": "gzip"})
+                # a second connection: the door serves it concurrently
+                assert probe.execute("show processlist")[2] == [], query
+    finally:
+        del eng.track_query
+
+
 def test_max_execution_time_over_http(served):
     """Per-request max_execution_time URL setting: a scan that blows the
     budget dies with CH's TIMEOUT_EXCEEDED shape; a query under budget
@@ -834,14 +868,9 @@ def test_max_execution_time_over_http(served):
         st, _h, data = c.raw(
             query="select count(*) as n from numbers(100) FORMAT TSV")
         assert st == 200 and data == b"100\n"
-        # eventual drain: the timed-out scan's task-kill unwind reaps
-        # its registry entry asynchronously (see tests/util_drain.py)
-        import time as _time
-        for _ in range(80):
-            _n, _t, rows = c.execute("show processlist")
-            if rows == []:
-                break
-            _time.sleep(0.25)
+        # the last response bytes go out after the registry entry is
+        # gone, so nothing but this statement itself can be listed
+        _n, _t, rows = c.execute("show processlist")
         assert rows == []
         # a budget passed WITH a session_id persists for the session
         # (resolved at track time, never through the shared engine

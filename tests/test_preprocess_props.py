@@ -8,15 +8,52 @@ pin the invariants that class of bug violates:
   _preprocess_ch_clauses byte-identical;
 - the preprocessor is idempotent on a corpus of representative CH
   statements (a second pass must not rewrite its own output);
-- string literals are opaque to both the preprocessor and translate_sql,
-  even when they contain trigger keywords or function-call spellings.
+- string literals, quoted names and comments are opaque to every pass of
+  the statement pipeline and to translate_sql, even when they contain
+  trigger keywords, function-call spellings, escaped quotes or parens.
+
+The passes work on lexed (masked) text; _rewrite lexes, runs one pass
+and unmasks, the way the engine's query path does.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from tensorbase_spark.engine import _preprocess_ch_clauses, translate_sql
+from tensorbase_spark.engine import (
+    PartitionSpec,
+    TensorBaseEngine,
+    _lex,
+    _preprocess_ch_clauses,
+    _unmask,
+    translate_sql,
+)
+
+
+def _rewrite(fn, q: str) -> str:
+    masked, lits = _lex(q)
+    return _unmask(fn(masked), lits)
+
+
+class _Stub(TensorBaseEngine):
+    """The engine's text passes without a SparkSession: no catalog
+    tables, views, buffers, projections or dictionaries, and ``t`` the
+    one partitioned table (``rem(a, 10)``)."""
+
+    def __init__(self, params=None):
+        self._params = params or {}
+        self._param_views, self._buffer_pending = {}, {}
+        self._projections, self._dicts = {}, {}
+
+    def _qualify(self, name):
+        return name if "." in name else f"default.{name}"
+
+    def _table_props(self, name):
+        raise LookupError(name)
+
+    def _spec_for(self, name):
+        return PartitionSpec("a", "rem", 10) if name.split(".")[-1] == "t" else None
+
 
 PLAIN = [
     "select a, b from t where a > 1 group by a, b having count(*) > 2",
@@ -31,7 +68,7 @@ PLAIN = [
 
 @pytest.mark.parametrize("q", PLAIN)
 def test_preprocess_identity_on_plain_sql(q):
-    assert _preprocess_ch_clauses(q) == q
+    assert _rewrite(_preprocess_ch_clauses, q) == q
 
 
 CH_CORPUS = [
@@ -57,26 +94,37 @@ CH_CORPUS = [
 
 @pytest.mark.parametrize("q", CH_CORPUS)
 def test_preprocess_idempotent(q):
-    once = _preprocess_ch_clauses(q)
-    assert _preprocess_ch_clauses(once) == once
+    once = _rewrite(_preprocess_ch_clauses, q)
+    assert _rewrite(_preprocess_ch_clauses, once) == once
 
 
+# (statement, text that must reach Spark verbatim)
 LITERAL_QUERIES = [
-    "select 'group by x with totals' as s from t",
-    "select 'from t final' as s",
-    "select '* except b' as s",
-    "select 'limit 1, 2' as s",
-    "select 'toYear(d)' as s",
-    'select "a FINAL" from t',
+    ("select 'group by x with totals' as s from t", "group by x with totals"),
+    ("select 'from t final' as s", "from t final"),
+    ("select '* except b' as s", "* except b"),
+    ("select 'limit 1, 2' as s", "limit 1, 2"),
+    ("select 'toYear(d)' as s", "toYear(d)"),
+    ('select "a FINAL" from t', "a FINAL"),
+    ("select 'a\\'b from t final' from t", "'a\\'b from t final'"),
+    ("select 'O\\'Brien toYear(d)' as s", "'O\\'Brien toYear(d)'"),
+    ('select "x\\" from t final" as s', '"x\\" from t final"'),
+    ("select `a [1]` from t", "`a [1]`"),
+    ("select `toYear(d) final` from t", "`toYear(d) final`"),
+    ("select 1 /* it's */, 'toYear(d)' as s from t", "'toYear(d)'"),
+    ("select 1 as a -- it's\n, 'limit 1, 2' as s", "'limit 1, 2'"),
+    ("select 1 from t where a = 3 -- it's\n and b = 'toYear(d)'", "'toYear(d)'"),
 ]
 
 
-@pytest.mark.parametrize("q", LITERAL_QUERIES)
-def test_string_literals_are_opaque(q):
-    # the literal text must survive both layers verbatim
-    lit = q.split("'")[1] if "'" in q else q.split('"')[1]
-    assert lit in _preprocess_ch_clauses(q)
-    assert lit in translate_sql(_preprocess_ch_clauses(q))
+@pytest.mark.parametrize(
+    "q, lit", [pytest.param(q, lit, id=q) for q, lit in LITERAL_QUERIES]
+)
+def test_string_literals_are_opaque(q, lit):
+    # the literal text must survive the statement pipeline and the
+    # translator verbatim
+    assert lit in _Stub()._translate_query(q)
+    assert lit in translate_sql(q)
 
 
 def test_translate_leaves_unknown_functions_untouched():
@@ -109,16 +157,16 @@ def test_scalar_with_leaves_ctes_untouched():
         "select a from t",  # no WITH at all
     ]
     for q in ctes:
-        assert _rewrite_scalar_with(q) == q, q
+        assert _rewrite(_rewrite_scalar_with, q) == q, q
 
 
 def test_scalar_with_inlines_and_respects_strings():
     from tensorbase_spark.engine import _rewrite_scalar_with
 
-    out = _rewrite_scalar_with("with 5 as n select n, 'n' as lit from t")
+    out = _rewrite(_rewrite_scalar_with, "with 5 as n select n, 'n' as lit from t")
     assert "(5)" in out and "'n'" in out and "with" not in out.lower()
     # chained aliases expand through each other
-    out2 = _rewrite_scalar_with("with 2 as a, a + 1 as b select b from t")
+    out2 = _rewrite(_rewrite_scalar_with, "with 2 as a, a + 1 as b select b from t")
     assert "((2) + 1)" in out2
 
 
@@ -131,8 +179,10 @@ def test_with_ties_only_rewrites_the_clause():
         "select 'limit 5 with ties' as s from t",
     ]
     for q in plain:
-        assert _rewrite_limit_with_ties(q) == q, q
-    out = _rewrite_limit_with_ties("select a from t order by a limit 5 with ties")
+        assert _rewrite(_rewrite_limit_with_ties, q) == q, q
+    out = _rewrite(
+        _rewrite_limit_with_ties, "select a from t order by a limit 5 with ties"
+    )
     assert "rank() over" in out and "__rk <= 5" in out
 
 
@@ -147,17 +197,116 @@ def test_strip_outer_parens_balanced_only():
 
 
 def test_param_binder_skips_literals_and_plain_text():
-    from tensorbase_spark.engine import TensorBaseEngine
+    e = _Stub({"x": "7"})
+    assert e._translate_query("select 1") == "select 1"
+    out = e._translate_query("select {x:Int64} as v, '{x:Int64}' as lit")
+    assert "cast('7' as bigint)" in out.lower() and "'{x:Int64}'" in out
+    with pytest.raises(ValueError, match="param_y"):
+        e._translate_query("select {y:Int64}")
 
-    class _Stub(TensorBaseEngine):
-        def __init__(self):  # no SparkSession needed for the binder
-            self._params = {"x": "7"}
 
-    e = _Stub()
-    assert e._bind_query_params("select 1") == "select 1"
-    out = e._bind_query_params("select {x:Int64} as v, '{x:Int64}' as lit")
-    assert "CAST('7' AS bigint)" in out and "'{x:Int64}'" in out
-    import pytest as _p
+# --- fuzz: injected literals, comments and quoted names change nothing else --
 
-    with _p.raises(ValueError, match="param_y"):
-        e._bind_query_params("select {y:Int64}")
+_NOISE = [
+    "from t final", "system.one", "file(x)", "toYear(d)", "group by x with totals",
+    "limit 1, 2", "array join a", "settings a = 1", "prewhere b", "{p:Int64}",
+    "[1]", "* except b", "where a = 1 or", "(", ")", "((", "--", "/*", "*/", ",",
+]
+
+
+def _registry_corpus() -> list[str]:
+    """Every SELECT/WITH string constant of the query modules, plus CH_CORPUS."""
+    import ast
+    import pathlib
+    import re
+
+    import tensorbase_spark.queries as queries
+
+    out = []
+    for path in sorted(pathlib.Path(queries.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and re.match(r"(?is)\s*(select|with)\b", node.value)
+            ):
+                out.append(node.value.strip())
+    return out + CH_CORPUS
+
+
+def _gaps(q: str) -> list[int]:
+    """Whitespace offsets of ``q`` outside its literals, names and comments
+    and outside function-call arguments — the clause positions the rewrite
+    passes scan (a call's template may legitimately read a literal)."""
+    from tensorbase_spark.engine import _LEX_RE
+
+    opaque = set()
+    for m in _LEX_RE.finditer(q):
+        opaque.update(range(*m.span()))
+    gaps, calls = [], []
+    for k, ch in enumerate(q):
+        if k in opaque:
+            continue
+        if ch == "(":
+            j = k - 1
+            while j >= 0 and q[j].isspace():
+                j -= 1
+            word = j >= 0 and (q[j].isalnum() or q[j] == "_")
+            sub = q[k + 1 : k + 8].lstrip().lower().startswith(("select", "with"))
+            calls.append(word and not sub)
+        elif ch == ")":
+            if calls:
+                calls.pop()
+        elif ch.isspace() and not any(calls):
+            gaps.append(k)
+    return gaps
+
+
+def _injections(rng):
+    """(span, its reference) pairs: the reference is what the span must
+    rewrite like — a plain literal or name for opaque spans, the lexed
+    whitespace for comments."""
+    noise = " ".join(rng.sample(_NOISE, 3))
+    lit = noise.replace("'", "")
+    yield "'" + lit + rng.choice(["''", "\\'"]) + "'", "'__fz__'"
+    yield "`" + noise.replace("`", "") + "`", "`__fz__`"
+    yield "-- it's " + noise.replace("\n", "") + "\n", " \n"
+    yield "/* it's " + noise.replace("*/", "") + " */", " "
+
+
+def _outcome(q: str) -> str:
+    try:
+        return _Stub()._translate_query(q)
+    except Exception as e:  # the same error either way is the same outcome
+        return f"<{type(e).__name__}>"
+
+
+def test_injected_spans_are_opaque_to_every_pass():
+    """Seeded injections into the registry's own statements: a literal
+    full of trigger words, quotes and parens, a backticked name, and both
+    comment forms.  The statement pipeline must rewrite each exactly like
+    the same statement with a plain stand-in there, and carry the span
+    through verbatim."""
+    import random
+
+    bad = []
+    for i, q in enumerate(_registry_corpus()):
+        rng = random.Random(i)
+        gaps = _gaps(q)
+        if not gaps or "__fz__" in q:
+            continue
+        for span, ref in _injections(rng):
+            k = rng.choice(gaps)
+            got = _outcome(f"{q[:k]} {span} {q[k:]}")
+            want = _outcome(f"{q[:k]} {ref} {q[k:]}")
+            if "__fz__" in ref:
+                want = want.replace(ref, span)
+            if got != want:
+                bad.append((q[:60], span))
+    assert not bad, bad[:5]
+
+
+def test_optimizer_hint_survives():
+    q = "select /*+ MERGE(l) */ o.ok as ok, count(*) as n from o join l on o.ok = l.ok"
+    assert "/*+ MERGE(l) */" in _Stub()._translate_query(q)
+    assert "/*+ MERGE(l) */" in translate_sql(q)

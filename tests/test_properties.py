@@ -110,7 +110,7 @@ def test_with_fill_domain_arithmetic(frm, span, step):
     to = frm + span
     base = "select d, n from t group by d"
     got = _extract_with_fill(
-        f"{base} order by d with fill from {frm} to {to} step {step}"
+        f"{base} order by d with fill from {frm} to {to} step {step}", []
     )
     assert got is not None
     b, col, desc, f_, t_, s_, interp = got
